@@ -25,49 +25,23 @@ import graft.sources.SyntheticWeb
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession =
     // Shuffle spill dir on tmpfs: the sandbox has ONE shared ~280MB/s disk,
     // so disk-backed shuffle caps all widths identically — a pure artifact of
     // colocating "executors" on one box. A real N→4N cluster adds NVMe/disk
     // bandwidth with every node; tmpfs emulates that for the scaling probe.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(localDir))
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.local.dir", localDir)
-      // partitions == cores measured BEST here (4x was -30% at 32 cores:
-      // extra task overhead + worse cache locality beat straggler smoothing)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      // sound here: the corpus is written with exactly one file per bucket,
-      // so the sorted-bucket scan ordering elides the SMJ sort on pages
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("GRAFT_TIMING").contains("2")) {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val ms = (for { st <- i.submissionTime; c <- i.completionTime } yield c - st).getOrElse(-1L)
-          System.err.println(f"[stage ${i.stageId}%4d] ${ms}%6dms tasks=${i.numTasks}%4d ${i.name.take(90)}")
-        }
-      })
-    }
-    s
-  }
+    // Partitions == cores measured BEST here (4x was -30% at 32 cores:
+    // extra task overhead + worse cache locality beat straggler smoothing).
+    GraftSession.create(s"local[$cores]", cores, Some(localDir))
+
+  private[graft] def localDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle")
 
   /** Register the bucketed corpus in this session's (in-memory) catalog and
     * return the bucketed scan — SMJ against it needs no shuffle/sort on the
     * pages side (SURVEY.md §4.2 bucketing).
     */
-  private def bucketedPages(spark: SparkSession, corpusDir: String) = {
+  private[graft] def bucketedPages(spark: SparkSession, corpusDir: String): DataFrame = {
     spark.sql("DROP TABLE IF EXISTS pages_bucketed")
     spark.sql(
       s"""CREATE TABLE pages_bucketed
@@ -76,6 +50,19 @@ object Bench {
          |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
          |LOCATION '$corpusDir/pages_bucketed'""".stripMargin)
     spark.table("pages_bucketed")
+  }
+
+  /** A depth-0 frontier seeded from a `pct`% hash sample of the pages' URLs. */
+  private[graft] def seedFrontier(pages: DataFrame, pct: Int, cfg: CrawlConfig): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.functions.UrlFunctions
+    pages.select(col("url"))
+      .where(pmod(xxhash64(col("url")), lit(100)) < pct)
+      .withColumn("surt", UrlFunctions.surtUdf(col("url")))
+      .withColumn("host", UrlFunctions.hostOfUdf(col("url")))
+      .withColumn("host_bucket", UrlFunctions.hostBucket(col("host"), cfg.buckets))
+      .withColumn("depth", lit(0))
+      .withColumn("score", lit(1.0))
   }
 
   /** All width-sessions share one JVM: drain the previous session's heap
@@ -162,7 +149,7 @@ object Bench {
       val pages = bucketedPages(spark, corpusDir)
       val robots = SyntheticWeb.robotsTable(spark, web)
       // state snapshots on the same fast tier as shuffle (see session())
-      val stateBase = Paths.get(sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle"))
+      val stateBase = Paths.get(localDir)
       val state = Files.createTempDirectory(stateBase, s"graft-bench-$cores").toString
       // warm-up rounds (JIT + codegen + shuffle service warm paths)
       Crawler.crawl(spark, state, pages, robots, seeds, cfg, warmup)
@@ -180,7 +167,6 @@ object Bench {
     */
   private def dataflowRun(cores: Int, corpusDir: String, web: SyntheticWeb.WebConfig,
       pct: Int): (Double, Double) = {
-    import org.apache.spark.sql.functions._
     settleJvm()
     val spark = session(cores)
     try {
@@ -188,22 +174,15 @@ object Bench {
       val pages = bucketedPages(spark, corpusDir)
       val robotsBc = graft.operators.Robots.broadcastPolicies(
         spark, SyntheticWeb.robotsTable(spark, web), cfg)
-      def frontierOf(p: Int) = pages
-        .select(col("url"))
-        .where(pmod(xxhash64(col("url")), lit(100)) < p)
-        .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-        .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-        .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-        .withColumn("depth", lit(0))
-        .withColumn("score", lit(1.0))
       // warm-up (codegen + C2-compiled kernels + page cache) on pct/5:
       // a 2% warm-up left the first measured rep 2-3x slower than steady
       // state (JIT), inflating run-to-run variance
-      Crawler.expandOnce(spark, frontierOf(math.max(10, pct / 5)), pages, robotsBc, cfg).count()
-      val n = frontierOf(pct).count()
+      Crawler.expandOnce(spark, seedFrontier(pages, math.max(10, pct / 5), cfg),
+        pages, robotsBc, cfg).count()
+      val n = seedFrontier(pages, pct, cfg).count()
       val reps = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        Crawler.expandOnce(spark, frontierOf(pct), pages, robotsBc, cfg).count()
+        Crawler.expandOnce(spark, seedFrontier(pages, pct, cfg), pages, robotsBc, cfg).count()
         (System.nanoTime() - t0) / 1e9
       }
       System.err.println(reps.map(r => f"$r%.2f").mkString("[dataflow reps] ", " ", "s"))
@@ -429,7 +408,7 @@ object Bench {
     val doCrawl = sys.env.getOrElse("SPARK_GRAFT_BENCH_CRAWL", "1") == "1"
     val crawlJson = if (!doCrawl) "" else {
       val st = setupFromEnv()
-      val corpusBase = Paths.get(sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle"))
+      val corpusBase = Paths.get(localDir)
       Files.createDirectories(corpusBase)
       val corpus = Files.createTempDirectory(corpusBase, "graft-bench-corpus").toString
       // corpus generation is a forked Spark phase too (see measureForked)

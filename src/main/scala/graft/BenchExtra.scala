@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 optimization-side instrumentation (guide §1) — a SEPARATE main so
   * the frozen driver bench ([[Bench]]) is untouched. Modes (first arg):
   *
@@ -14,47 +12,21 @@ import org.apache.spark.sql.SparkSession
   *    rep, report min/median; `all` runs the full suite once in bench order.
   *  - `noop q1,q2,.. [reps]` — same but through the noop sink (guide §1.4):
   *    every column of every row computed, no count-only pruning.
-  *  - `stages q` — run one query with a stage-completion listener so the
-  *    per-stage wall/task breakdown is visible on stderr.
-  *
-  * Session config mirrors the frozen bench session exactly (same shuffle
-  * partitions, AQE, extensions, timezone) so numbers are comparable.
+  *  - `stages q` — run one query with a [[TimingListener]] so the per-stage
+  *    wall/task and per-job wall/gap breakdown is visible on stderr, plus
+  *    the codegen compile count and time.
+  *  - `dataflow [pct]` — one frontier-expansion rep on the bench corpus with
+  *    every physical operator's metrics (needs SPARK_GRAFT_BENCH_CORPUS).
+  *  - `dfab [pct]` — ablation ladder over that rep, one layer per rung.
+  *  - `cluster [pairs]` — the dataflow rep on 1 vs 4 local-cluster executor
+  *    JVMs (needs the full Spark dist: SPARK_HOME, SPARK_SCALA_VERSION).
+  *  - `kernel [n]` — per-row scan and resolve+canon costs, no Spark.
   */
 object BenchExtra {
 
-  private def session(cores: Int): SparkSession = {
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle")
-    Files.createDirectories(Paths.get(localDir))
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def addStageListener(s: SparkSession): Unit =
-    s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val ms = (for { st <- i.submissionTime; c <- i.completionTime } yield c - st).getOrElse(-1L)
-        System.err.println(f"[stage ${i.stageId}%4d] ${ms}%6dms tasks=${i.numTasks}%4d ${i.name.take(100)}")
-      }
-    })
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cores
     val mode = args.headOption.getOrElse("time")
     val all = SparkEntry.queries
     def named(spec: String): Seq[String] =
@@ -64,7 +36,7 @@ object BenchExtra {
       case "explain" =>
         val names = named(args(1))
         val suffix = if (args.length > 2) args(2) else "plan"
-        val spark = session(cpus)
+        val spark = Bench.session(cpus)
         Files.createDirectories(Paths.get("plans/r06"))
         names.foreach { n =>
           val df = all(n)(spark, sfDir)
@@ -78,7 +50,7 @@ object BenchExtra {
       case "time" | "noop" =>
         val names = named(args(1))
         val reps = if (args.length > 2) args(2).toInt else 3
-        val spark = session(cpus)
+        val spark = Bench.session(cpus)
         // same warm-up as the frozen bench
         try {
           import org.apache.spark.sql.functions.{col, count}
@@ -100,24 +72,10 @@ object BenchExtra {
 
       case "stages" =>
         val n = args(1)
-        val spark = session(cpus)
-        addStageListener(spark)
-        // job-level wall + the GAP since the previous job ended (planning,
-        // codegen compilation, driver-side work live in the gaps)
-        val lastEnd = new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
-        val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val gap = j.time - lastEnd.get()
-            jobStart.put(j.jobId, j.time)
-            System.err.println(f"[job ${j.jobId}%3d start] gap since prev end ${gap}%5d ms")
-          }
-          override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val wall = j.time - Option(jobStart.get(j.jobId)).getOrElse(j.time)
-            lastEnd.set(j.time)
-            System.err.println(f"[job ${j.jobId}%3d end]   wall ${wall}%5d ms")
-          }
-        })
+        val spark = Bench.session(cpus)
+        // GRAFT_TIMING=2 already attached one
+        if (!sys.env.get("GRAFT_TIMING").contains("2"))
+          spark.sparkContext.addSparkListener(new TimingListener(System.err))
         def codegenStats(): (Long, Long) = {
           import org.apache.spark.metrics.source.CodegenMetrics
           (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
@@ -143,28 +101,14 @@ object BenchExtra {
         // UI would otherwise show (guide §7.1/§7.2)
         val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
         val pct = if (args.length > 1) args(1).toInt else 100
-        val spark = session(cpus)
-        import org.apache.spark.sql.functions._
+        val spark = Bench.session(cpus)
         val web = graft.sources.SyntheticWeb.WebConfig(
           seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        spark.sql("DROP TABLE IF EXISTS pages_bucketed")
-        spark.sql(
-          s"""CREATE TABLE pages_bucketed
-             |(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
-             |USING parquet
-             |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
-             |LOCATION '$corpus/pages_bucketed'""".stripMargin)
-        val pages = spark.table("pages_bucketed")
+        val pages = Bench.bucketedPages(spark, corpus)
         val cfg = graft.model.CrawlConfig()
         val robotsBc = graft.operators.Robots.broadcastPolicies(
           spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-        def frontier = pages.select(col("url"))
-          .where(pmod(xxhash64(col("url")), lit(100)) < pct)
-          .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-          .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-          .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-          .withColumn("depth", lit(0))
-          .withColumn("score", lit(1.0))
+        def frontier = Bench.seedFrontier(pages, pct, cfg)
         graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg).count() // warm
         val df = graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg)
         val t0 = System.nanoTime()
@@ -195,30 +139,17 @@ object BenchExtra {
         // so the diffs attribute the rep's cost (guide §1.1 empirical loop)
         val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
         val pct = if (args.length > 1) args(1).toInt else 100
-        val spark = session(cpus)
+        val spark = Bench.session(cpus)
         import org.apache.spark.sql.functions._
         val web = graft.sources.SyntheticWeb.WebConfig(
           seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        spark.sql("DROP TABLE IF EXISTS pages_bucketed")
-        spark.sql(
-          s"""CREATE TABLE pages_bucketed
-             |(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
-             |USING parquet
-             |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
-             |LOCATION '$corpus/pages_bucketed'""".stripMargin)
-        val pages = spark.table("pages_bucketed")
+        val pages = Bench.bucketedPages(spark, corpus)
         val cfg = graft.model.CrawlConfig()
         val robotsBc = graft.operators.Robots.broadcastPolicies(
           spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
         val allowPathUdf = udf((host: String, path: String) =>
           robotsBc.value.get(host).forall(_.allows(path)))
-        def frontier = pages.select(col("url"))
-          .where(pmod(xxhash64(col("url")), lit(100)) < pct)
-          .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-          .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-          .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-          .withColumn("depth", lit(0))
-          .withColumn("score", lit(1.0))
+        def frontier = Bench.seedFrontier(pages, pct, cfg)
         def admitted = frontier.select("surt", "url", "host", "host_bucket", "depth", "score")
         def joined = pages.select(col("url"), col("html"))
           .join(admitted.hint("merge"), Seq("url"), "inner")
@@ -265,45 +196,19 @@ object BenchExtra {
         val memMb = 9216
         val web = graft.sources.SyntheticWeb.WebConfig(
           seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
+        // deployment settings, read by SparkConf from `spark.*` system properties
+        sys.props("spark.executor.memory") = s"${memMb}m"
+        sys.props("spark.executor.extraClassPath") = new java.io.File(
+          getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
         def clusterRun(nExec: Int): Double = {
-          val classesDir = new java.io.File(
-            getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
-          val spark = SparkSession.builder()
-            .master(s"local-cluster[$nExec,$coresPer,$memMb]")
-            .appName(s"graft-cluster-$nExec")
-            .config("spark.executor.memory", s"${memMb}m")
-            .config("spark.executor.extraClassPath", classesDir)
-            .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle"))
-            .config("spark.sql.shuffle.partitions", (nExec * coresPer).toString)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.locality.wait", "0")
-            .config("spark.sql.files.maxPartitionBytes", "16m")
-            .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-          spark.sparkContext.setLogLevel("WARN")
+          val spark = GraftSession.create(
+            s"local-cluster[$nExec,$coresPer,$memMb]", nExec * coresPer, Some(Bench.localDir))
           try {
-            import org.apache.spark.sql.functions._
-            spark.sql("DROP TABLE IF EXISTS pages_bucketed")
-            spark.sql(
-              s"""CREATE TABLE pages_bucketed
-                 |(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
-                 |USING parquet
-                 |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
-                 |LOCATION '$corpus/pages_bucketed'""".stripMargin)
-            val pages = spark.table("pages_bucketed")
+            val pages = Bench.bucketedPages(spark, corpus)
             val cfg = graft.model.CrawlConfig()
             val robotsBc = graft.operators.Robots.broadcastPolicies(
               spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-            def frontierOf(p: Int) = pages.select(col("url"))
-              .where(pmod(xxhash64(col("url")), lit(100)) < p)
-              .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-              .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-              .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-              .withColumn("depth", lit(0))
-              .withColumn("score", lit(1.0))
+            def frontierOf(p: Int) = Bench.seedFrontier(pages, p, cfg)
             graft.plans.Crawler.expandOnce(spark, frontierOf(20), pages, robotsBc, cfg).count()
             val n = frontierOf(100).count()
             val secs = (1 to 2).map { _ =>
@@ -366,7 +271,7 @@ object BenchExtra {
         }
 
       case other =>
-        System.err.println(s"unknown mode '$other' (explain|time|noop|stages|kernel)")
+        System.err.println(s"unknown mode '$other' (explain|time|noop|stages|dataflow|dfab|cluster|kernel)")
         sys.exit(2)
     }
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.CrawlConfig
 import graft.plans.Crawler
 import graft.sources.{StateTable, SyntheticWeb}
@@ -12,8 +10,8 @@ import graft.sources.{StateTable, SyntheticWeb}
   * Usage: CrawlMain <stateDir> [nPages] [nHosts] [rounds] [budget] [seeds]
   * A pre-existing <stateDir> resumes from its last committed snapshot.
   * On a cluster this is the job the contract describes (`spark-submit` at N
-  * and 4N executors); locally the master defaults to local[*] or
-  * SPARK_GRAFT_CPUS.
+  * and 4N executors); the master is SPARK_GRAFT_MASTER, else local[N] with
+  * N = SPARK_GRAFT_CPUS or every processor.
   */
 object CrawlMain {
   def main(args: Array[String]): Unit = {
@@ -24,37 +22,8 @@ object CrawlMain {
     val budget = if (args.length > 4) args(4).toInt else 1000
     val nSeeds = if (args.length > 5) args(5).toInt else 20
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("GRAFT_CODEGEN", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("GRAFT_TIMING").contains("2")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val ms = (for { s <- i.submissionTime; c <- i.completionTime } yield c - s).getOrElse(-1L)
-          System.err.println(f"[stage ${i.stageId}%4d] ${ms}%6dms tasks=${i.numTasks}%4d ${i.name.take(90)}")
-        }
-        private var lastJobEnd = 0L
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val gap = if (lastJobEnd == 0) 0 else j.time - lastJobEnd
-          System.err.println(f"[job ${j.jobId}%4d start] gap=${gap}%6dms")
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          lastJobEnd = j.time
-        }
-      })
-    }
+    val cpus = GraftSession.cores
+    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
 
     val web = SyntheticWeb.WebConfig(seed = 42L, nPages = nPages, nHosts = nHosts)
     val pages = SyntheticWeb.pages(spark, web).toDF().cache()

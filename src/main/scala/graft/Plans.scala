@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -22,16 +22,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("BENCH/PLANS.md")
     val sf = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("local[4]", 4)
     import spark.implicits._
 
     val md = new StringBuilder
@@ -126,12 +117,7 @@ object Plans {
       val cfg = graft.model.CrawlConfig()
       val robotsBc = graft.operators.Robots.broadcastPolicies(
         spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-      val frontier = pages.select(col("url"))
-        .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-        .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-        .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-        .withColumn("depth", lit(0))
-        .withColumn("score", lit(1.0))
+      val frontier = Bench.seedFrontier(pages, 100, cfg)
       section("Frontier expansion: fetch → extract → canonicalize → dedup + OPIC as ONE plan",
         "The whole per-round dataflow is a single declarative plan " +
           "(what the dataflow scaling probe measures): no driver-side " +
@@ -166,7 +152,6 @@ object Plans {
 
     // 9. the injected optimizer rule: UDF composition → fused native kernel
     {
-      graft.functions.UrlFunctions.register(spark)
       spark.read.parquet(s"$sf/documents.parquet")
         .select(concat(lit("http://h"), col("doc_id"), lit(".example/a/b")).as("base"),
           lit("../c?x=1&utm_source=t").as("href"))

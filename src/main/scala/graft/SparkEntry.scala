@@ -334,7 +334,6 @@ object SparkEntry {
 
     // ---- U2/U4/U5: canonicalization family (UDF; oracle = in-repo suites) ----
     "q_u2_canon" -> ((s, dir) => {
-      UrlFunctions.register(s)
       s.read.parquet(t(dir, "documents"))
         .withColumn("messy", concat(lit("HTTP://H"), pmod(col("doc_id"), lit(40)),
           lit(".Example.COM:80/a/../d"), pmod(col("doc_id"), lit(7)),

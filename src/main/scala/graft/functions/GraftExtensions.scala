@@ -38,7 +38,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Runs in the operator-optimization batch (fixpoint), injected via
   * [[GraftExtensions]] — `spark.sql.extensions=graft.functions.GraftExtensions`,
-  * set by every graft session builder and usable verbatim in spark-submit.
+  * set by `graft.GraftSession` and usable verbatim in spark-submit.
   */
 object NativeUrlRewrite extends Rule[LogicalPlan] {
 

@@ -219,7 +219,7 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("SQL surface: every registered function is callable from spark.sql") {
-    // UrlFunctions.register runs in SparkTestSession; this drives each name
+    // GraftSession.create runs UrlFunctions.register; this drives each name
     // through the SQL parser so a rename or signature drift fails loudly
     val row = spark.sql(
       """SELECT

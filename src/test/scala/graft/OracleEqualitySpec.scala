@@ -194,7 +194,6 @@ class OracleEqualitySpec extends AnyFunSuite with SparkTestSession {
     // (url) catalog table must equal the oracle exactly, with the merge arm
     // forced (broadcast gate 0) so every fetch goes through the bucketed SMJ
     val dir = tmpDir("oracle-c8-bucketed")
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     pagesDf.repartition(8, col("url"))
       .write.bucketBy(8, "url").sortBy("url")
       .option("path", s"$dir/pages_b").mode("overwrite").saveAsTable("oracle_c8_pages")

@@ -64,8 +64,6 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       .write.bucketBy(8, "url").sortBy("url")
       .option("path", s"$dir/pages_b").mode("overwrite").saveAsTable("plan_spec_pages")
     try {
-      // off by default since 3.0; sound when each bucket has exactly one file
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       val bucketed = spark.table("plan_spec_pages")
       val admitted = pages.limit(50).select(col("url"), lit(0).as("depth"))
       val joined = bucketed.select(col("url"), col("html"))
@@ -97,7 +95,6 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
       .option("path", s"$dir/seen_b").mode("overwrite").saveAsTable("plan_spec_seen")
     val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // model at-scale stats: nothing auto-broadcasts (same move as the D3
       // gate test above)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -3,23 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites (sbt forks a single
-  * test JVM). Shuffle partitions kept small for test latency.
+  * test JVM), built by the engine's own factory so tests run the plans the
+  * bench times. Shuffle partitions kept small for test latency.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.UrlFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.create("local[4]", 4)
 }
 
 trait SparkTestSession {

@@ -26,6 +26,9 @@ object GraftSession {
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    // Spark's default of 100 generated classes is smaller than one warm pass
+    // of the graph queries or one crawl round, so each pass would recompile
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.ui.enabled" -> "false")
 
   /** Local width: `SPARK_GRAFT_CPUS`, else every processor of this host. */

@@ -43,7 +43,12 @@ final case class HostState(
     crawl_delay_rounds: Double,
     last_round: Long)
 
-/** Per-fetch lineage record (BASELINE.json: per-partition lineage + counters). */
+/** Per-fetch lineage record (BASELINE.json: per-partition lineage + counters).
+  * `partition_id` is the fetch task's partition. On the broadcast fetch arm
+  * a 200 row carries the coalesced fetch root's partition, 0 until the
+  * session's default parallelism (its core count), not a corpus bucket; the
+  * 404 rows are unioned after the root, so their ids number on from there.
+  */
 final case class FetchRecord(
     round: Long,
     surt: String,

@@ -123,8 +123,22 @@ object CrawlRound {
     * silently (round-1 verdict: the fat html column shuffled on the default
     * arm) — both joins here are broadcast-LEGAL, so pages is never shuffled.
     *
+    * Width rule (broadcast arm only): the root holds at most
+    * broadcastFetchMaxBudget rows, so it is coalesced to the session's
+    * `defaultParallelism` instead of inheriting the corpus scan's bucket
+    * count (64 on a bucketed corpus). Every stage downstream of the root —
+    * fetch log, candidate generation, seen and frontier commits — then runs
+    * cores-wide, not 64 near-empty tasks wide. `coalesce`, not `repartition`:
+    * coalesce concatenates whole scan partitions in a fixed order, so rows
+    * reach the OPIC `sum(contrib)` in the same order and every stored score
+    * stays bit-identical; a round-robin repartition reorders them and moves
+    * scores by an ulp. The trade: the corpus scan itself now runs
+    * session-width tasks that each read buckets/cores files — the same
+    * parallelism, with a coarser retry unit.
+    *
     * Merge arm: zero shuffle/sort on a url-bucketed+sorted corpus, fully
-    * parallel on the admitted side (the 10^10-scale path).
+    * parallel on the admitted side (the 10^10-scale path); left at the
+    * corpus width.
     */
   private[graft] def fetchJoin(
       pages: DataFrame,
@@ -134,7 +148,8 @@ object CrawlRound {
       val hits0 = scanned(
           pages.select(col("url"), col("html"))
             .join(broadcast(admittedSlim), Seq("url"))
-            .withColumn("status", lit(200)))
+            .withColumn("status", lit(200))
+            .coalesce(pages.sparkSession.sparkContext.defaultParallelism))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val misses = admittedSlim
         .join(broadcast(hits0.select("url")), Seq("url"), "left_anti")

@@ -145,6 +145,33 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     root.unpersist()
   }
 
+  test("broadcast fetch arm: root coalesced to the session width, rows unchanged") {
+    import spark.implicits._
+    val width = spark.sparkContext.defaultParallelism
+    // wider than the session, like the crawl's 64-bucket corpus scan
+    val web = graft.sources.SyntheticWeb.pages(
+      spark, graft.sources.SyntheticWeb.WebConfig(nPages = 300, nHosts = 6)).toDF()
+    val pages = web.repartition(64)
+    assert(pages.rdd.getNumPartitions > width)
+    // 20 hits plus 3 urls the corpus lacks, so the 404 union is covered too
+    val admitted = web.select("url").limit(20)
+      .union(Seq("http://absent-a/x", "http://absent-b/y", "http://absent-c/z").toDF("url"))
+      .select(col("url"), col("url").as("surt"), lit("h").as("host"),
+        lit(0).as("host_bucket"), lit(0).as("depth"), lit(1.0).as("score"))
+    val (fetched, _, root) = graft.plans.CrawlRound.fetchJoin(pages, admitted, broadcastArm = true)
+    assert(root.rdd.getNumPartitions <= width,
+      s"fetch root is ${root.rdd.getNumPartitions} partitions wide on a $width-core session")
+    // the merge arm is the same join at the corpus width, without the coalesce
+    val (reference, _, refRoot) = graft.plans.CrawlRound.fetchJoin(pages, admitted, broadcastArm = false)
+    def rows(df: DataFrame) = df.select("url", "status", "n_links", "text_xxh64")
+      .as[(String, Int, Int, Long)].collect().sorted.toSeq
+    val got = rows(fetched)
+    assert(got == rows(reference))
+    assert(got.count(_._2 == 200) == 20 && got.count(_._2 == 404) == 3 && got.exists(_._3 > 0))
+    root.unpersist()
+    refRoot.unpersist()
+  }
+
   test("D3 gate: both arms identical membership; big arm avoids broadcast") {
     import spark.implicits._
     val needExact = (1L to 500L).map(i => (s"s$i", i)).toDF("surt", "url_hash")

@@ -158,17 +158,17 @@ object BenchExtra {
           .select(
             col("surt").as("parent_surt"), col("url").as("base_url"),
             col("depth").as("parent_depth"), col("score"),
-            graft.functions.CanonExpressions.pageScanHashCol(col("html")).as("scan"))
+            graft.functions.CanonExpressions.pageScanHrefsCol(col("html")).as("scan"))
           .select(col("parent_surt"), col("base_url"), col("parent_depth"),
             (col("score") / greatest(size(col("scan.links")), lit(1))).as("contrib"),
             explode(col("scan.links")).as("link"))
         def resolved = exploded
-          .withColumn("cp", graft.functions.CanonExpressions.resolveCanonCol(col("base_url"), col("link").getField("href")))
+          .withColumn("cp", graft.functions.CanonExpressions.resolveCanonCol(col("base_url"), col("link")))
           .where(col("cp").isNotNull && col("cp.url").startsWith("http") &&
             allowPathUdf(col("cp.host"), col("cp.path")))
         val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
           ("scan+join only (html bytes)", () => joined.select(length(col("html")).as("n")).groupBy().sum("n")),
-          ("…+scanUDF+explode", () => exploded.select(col("link").getField("href")).groupBy().count()),
+          ("…+scanUDF+explode", () => exploded.select(col("link")).groupBy().count()),
           ("…+resolve+robots", () => resolved.select(col("cp.surt")).groupBy().count()),
           ("…+agg by surt (full rep)", () => graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg)))
         variants.foreach { case (label, mk) =>
@@ -231,7 +231,7 @@ object BenchExtra {
 
       case "kernel" =>
         // pure per-row kernel costs (no Spark): the crawl/dataflow hot path is
-        // parquet-decode → scanPageHashed → resolveCanon per link. Times here
+        // parquet-decode → scanPageHrefs → resolveCanon per link. Times here
         // bound what per-task-work optimization (guide §1.2 step 2) can buy.
         val n = if (args.length > 1) args(1).toInt else 20000
         val cfg = graft.sources.SyntheticWeb.WebConfig(
@@ -247,16 +247,16 @@ object BenchExtra {
           println(f"$label%-22s ${dt}%7.3f s  (${dt * 1e9 / n}%8.0f ns/page, sink=$sink)")
         }
         var nLinks = 0L
-        bench("scanPageHashed") {
+        bench("scanPageHrefs") {
           var acc = 0L; var i = 0
           while (i < n) {
-            val ps = graft.functions.Html.scanPageHashed(htmls(i))
-            acc += ps.links.length + ps.textXxh64; nLinks += ps.links.length; i += 1
+            val ps = graft.functions.Html.scanPageHrefs(htmls(i))
+            acc += ps.hrefs.length + ps.textXxh64; nLinks += ps.hrefs.length; i += 1
           }
           acc
         }
         val links = (0 until n).flatMap { i =>
-          graft.functions.Html.scanPageHashed(htmls(i)).links.map(l => (bases(i), l.href))
+          graft.functions.Html.scanPageHrefs(htmls(i)).hrefs.map(h => (bases(i), h))
         }.toArray
         println(s"links: ${links.length} (${links.length.toDouble / n} per page)")
         bench("resolve+canonParts") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the canonicalization hot path (SURVEY.md
-  * §4.3 / M12): resolve+canon+SURT and the fused page scan as expressions
+  * §4.3 / M12): resolve+canon+SURT and the crawl's page scan as expressions
   * with `doGenCode`, so the candidate pipeline stays inside one whole-stage
   * codegen span with a direct static call per row — no ScalaUDF closure
   * dispatch, no CatalystTypeConverter boxing of the struct/array results
@@ -47,56 +47,12 @@ object CanonKernel {
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  /** One UTF-8 decode → (links, text), as Catalyst-internal values. */
-  def pageScan(html: Array[Byte]): InternalRow = {
-    val ps = Html.scanPage(html)
-    val links = new Array[Any](ps.links.length)
-    var i = 0
-    val it = ps.links.iterator
-    while (it.hasNext) {
-      val l = it.next()
-      links(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(links), UTF8String.fromString(ps.text)))
-  }
-
   val canonPartsType: StructType = StructType(Seq(
     StructField("url", StringType), StructField("host", StringType),
     StructField("path", StringType), StructField("surt", StringType)))
 
-  val pageScanType: StructType = StructType(Seq(
-    StructField("links", ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("anchor", StringType))))),
-    StructField("text", StringType)))
-
-  /** Hot-path variant: links + xxhash64-of-text, no text materialization
-    * (zero page-sized garbage — see Html.textHashFromString).
-    */
-  def pageScanHashed(html: Array[Byte]): InternalRow = {
-    val ps = Html.scanPageHashed(html)
-    val links = new Array[Any](ps.links.length)
-    var i = 0
-    val it = ps.links.iterator
-    while (it.hasNext) {
-      val l = it.next()
-      links(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(links), java.lang.Long.valueOf(ps.textXxh64)))
-  }
-
-  val pageScanHashedType: StructType = StructType(Seq(
-    StructField("links", ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("anchor", StringType))))),
-    StructField("text_xxh64", LongType)))
-
-  /** Round-6 crawl-hot-path variant: hrefs only (no anchors) + text hash —
-    * the fetch/candidate pipeline never reads anchors (see
+  /** The crawl's page scan as Catalyst values: hrefs only (no anchors) +
+    * text hash — the fetch/candidate pipeline never reads anchors (see
     * Html.scanPageHrefs).
     */
   def pageScanHrefs(html: Array[Byte]): InternalRow = {
@@ -186,42 +142,6 @@ case class SurtOf(child: Expression) extends UnaryExpression with ExpectsInputTy
     nullSafeCodeGen(ctx, ev, raw =>
       s"""
          |${ev.value} = graft.functions.CanonKernel.surt($raw);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused page scan: one UTF-8 decode → (links array, extracted text). */
-case class PageScan(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = CanonKernel.pageScanType
-  override def nullable: Boolean = true
-  override def prettyName: String = "page_scan"
-  override protected def nullSafeEval(html: Any): Any =
-    CanonKernel.pageScan(html.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |${ev.value} = graft.functions.CanonKernel.pageScan($html);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused page scan for the crawl hot path: links + xxhash64(text). */
-case class PageScanHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = CanonKernel.pageScanHashedType
-  override def nullable: Boolean = true
-  override def prettyName: String = "page_scan_hash"
-  override protected def nullSafeEval(html: Any): Any =
-    CanonKernel.pageScanHashed(html.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |${ev.value} = graft.functions.CanonKernel.pageScanHashed($html);
          |${ev.isNull} = ${ev.value} == null;
        """.stripMargin)
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -320,8 +240,6 @@ object CanonExpressions {
     column(ResolveCanonSurt(expression(base), expression(href)))
   def canonCol(raw: Column): Column = column(CanonUrl(expression(raw)))
   def surtCol(raw: Column): Column = column(SurtOf(expression(raw)))
-  def pageScanCol(html: Column): Column = column(PageScan(expression(html)))
-  def pageScanHashCol(html: Column): Column = column(PageScanHash(expression(html)))
   def pageScanHrefsCol(html: Column): Column = column(PageScanHrefsHash(expression(html)))
   /** Fused explode+resolve+canon: use in a select; the analyzer lifts it into
     * a `Generate` node yielding (url, host, path, surt) per resolvable link. */

@@ -52,26 +52,12 @@ case class ExtractLinksGen(child: Expression)
       s"extract_links needs html BYTES, got ${other.catalogString}")
   }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      // same byte-route guard as Html.scanPageHashed: the byte kernel is
-      // only char-exact on valid UTF-8 without the two non-ASCII chars that
-      // case-fold to ASCII (U+0130/U+212A in tag names); anything else must
-      // take the char route or the generator diverges from the frozen X1
-      // semantics it is oracle-pinned against (e.g. <scrİpt> blocks)
-      val links =
-        if (Html.isValidUtf8(bytes) && !Html.hasAsciiCaseFoldingChar(bytes))
-          Html.extractLinksFromBytes(bytes)
-        else Html.extractLinks(bytes)
-      links.iterator.map { l =>
-        new GenericInternalRow(Array[Any](
-          UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
-      }
+  // a null html scans as an empty page: no rows
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    Html.extractLinks(child.eval(input).asInstanceOf[Array[Byte]]).iterator.map { l =>
+      new GenericInternalRow(Array[Any](
+        UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
     }
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -40,8 +40,6 @@ object UrlFunctions {
   val extractLinksUdf = udf((html: Array[Byte]) => Html.extractLinks(html))
   val extractTextUdf = udf((html: Array[Byte]) => Html.extractText(html))
 
-  /** Fused hot-path UDFs (one decode / one parse pipeline per call). */
-  val pageScanUdf = udf((html: Array[Byte]) => Html.scanPage(html))
   val resolveCanonUdf = udf((base: String, href: String) =>
     Option(UrlCanon.canonParts(UrlCanon.resolve(base, href))))
 

@@ -14,19 +14,6 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
   lazy val pages = graft.sources.SyntheticWeb.pages(
     spark, graft.sources.SyntheticWeb.WebConfig(seed = 42L, nPages = 300, nHosts = 12)).toDF()
 
-  test("pageScan expression ≡ pageScan UDF on the corpus") {
-    val viaExpr = pages.select(col("url"), CanonExpressions.pageScanCol(col("html")).as("s"))
-      .select(col("url"), col("s.text"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    val viaUdf = pages.select(col("url"), UrlFunctions.pageScanUdf(col("html")).as("s"))
-      .select(col("url"), col("s.text"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    assert(viaExpr == viaUdf)
-    assert(viaExpr.nonEmpty, "trivially-empty comparison")
-  }
-
   test("resolveCanon expression ≡ resolveCanon UDF on corpus link soup") {
     val links = pages.select(col("url").as("base"),
       explode(UrlFunctions.extractLinksUdf(col("html"))).as("l"))
@@ -55,13 +42,18 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     assert(e == u)
   }
 
+  /** Spark's `xxhash64` (seed 42) of a string. */
+  private def xxh64(text: String): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    new XxHash64(Seq(Literal(text))).eval().asInstanceOf[Long]
+  }
+
   test("textHash ≡ xxhash64(extractText) — corpus + adversarial vectors") {
-    import org.apache.spark.unsafe.types.UTF8String
-    def expected(html: String): Long = {
-      val s = UTF8String.fromString(graft.functions.Html.extractTextFromString(html))
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-    }
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.functions.Html
+    def check(html: Array[Byte], tag: String): Unit =
+      assert(Html.scanPageHrefs(html).textXxh64 == xxh64(Html.extractText(html)),
+        s"hash mismatch for vector: $tag")
     val vectors = Seq(
       "", "   ", "plain text", "  lead and trail  ",
       "<p>a&amp;b</p>", "&amp;&lt;&gt;&quot;&apos;&nbsp;x",
@@ -73,50 +65,23 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
       "unpaired \ud800 surrogate", "low \udc00 alone",
       "<b>nested <i>tags</i></b> &lt;kept&gt;",
       "<p>entity spans tags: &am<b></b>p; stays</p>")
-    vectors.foreach { v =>
-      assert(graft.functions.Html.textHashFromString(v) == expected(v),
-        s"hash mismatch for vector: ${v.take(60)}")
-    }
-    // whole corpus, via both byte entrypoints
+    vectors.foreach(v => check(v.getBytes(UTF_8), v.take(60)))
+    check(null, "null")
     val rows = pages.select(col("html")).collect()
-    rows.foreach { r =>
-      val html = r.getAs[Array[Byte]](0)
-      val viaHash = graft.functions.Html.scanPageHashed(html).textXxh64
-      val s = UTF8String.fromString(graft.functions.Html.extractText(html))
-      val exp = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-      assert(viaHash == exp)
-    }
+    rows.foreach(r => check(r.getAs[Array[Byte]](0), "corpus"))
     assert(rows.nonEmpty)
   }
 
-  test("pageScanHash expression ≡ pageScan UDF links + xxhash64(text)") {
-    val viaHash = pages.select(col("url"),
-        CanonExpressions.pageScanHashCol(col("html")).as("s"))
-      .select(col("url"), col("s.text_xxh64"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text_xxh64"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    val viaUdf = pages.select(col("url"), UrlFunctions.pageScanUdf(col("html")).as("s"))
-      .select(col("url"), xxhash64(col("s.text")).as("h"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("h"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    assert(viaHash == viaUdf)
-    assert(viaHash.nonEmpty, "trivially-empty comparison")
-  }
-
-  test("byte-level scan ≡ char-level scan — corpus + adversarial byte vectors") {
+  test("byte scanner ≡ OracleHtml — corpus + adversarial byte vectors") {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.functions.Html
-    def reference(bytes: Array[Byte]): (Seq[(String, String)], Long) = {
-      val s = new String(bytes, UTF_8)
-      (Html.extractLinksFromString(s).toSeq.map(l => (l.href, l.anchor)),
-        Html.textHashFromString(s))
-    }
+    import graft.oracle.OracleHtml
     def check(bytes: Array[Byte], tag: String): Unit = {
-      val got = Html.scanPageHashed(bytes)
-      val (refLinks, refHash) = reference(bytes)
-      assert(got.links.toSeq.map(l => (l.href, l.anchor)) == refLinks, s"links [$tag]")
-      assert(got.textXxh64 == refHash, s"text hash [$tag]")
+      val links = Html.extractLinks(bytes).toSeq.map(l => (l.href, l.anchor))
+      val text = Html.extractText(bytes)
+      assert(links == OracleHtml.links(bytes).map(l => (l.href, l.anchor)), s"links [$tag]")
+      assert(text == OracleHtml.text(bytes), s"text [$tag]")
+      assert(Html.scanPageHrefs(bytes).textXxh64 == xxh64(text), s"text hash [$tag]")
     }
     val strings = Seq(
       "<a href=\"héllo/漢.html\">ünïcode 😀 anchor</a> täil",
@@ -124,36 +89,57 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
       "<script>var s='<a href=\"no\">';</script><a href=\"yes\">ok é</a>",
       "<a HREF=unquoted/路径>anchor</a>",
       "<a href=\"a\">one</a><a href=\"a\">dup</a><a href=\"b\">two</a>",
-      "no links, just &lt;text&gt; &nbsp; ws\t\n collapse",
-      // non-ASCII chars whose Character.toLowerCase IS an ASCII letter:
-      // the frozen char semantics see <scrİpt> as a script tag; the
-      // ASCII-only byte fold cannot — these must route to the char path
-      "<scrİpt>hidden('<a href=\"no\">')</scrİpt><a href=\"yes\">ok</a>",
-      "<SCRİPT>x</SCRİPT>visible", // İ in both open and close tag
-      "<a İd=1 href=\"k\">kelvin K anchor</a>",
-      "<styLE>a{}</style><stİle>not a style tag</stİle>")
+      "no links, just &lt;text&gt; &nbsp; ws\t\n collapse")
     strings.foreach(s => check(s.getBytes(UTF_8), s.take(30)))
-    // invalid UTF-8 → must take the char-path fallback and still agree
+    // invalid UTF-8: scanned as its decode-then-re-encode (U+FFFD for each
+    // malformed sequence), which is what the oracle's String decode sees
     val invalid = Seq(
       Array[Byte]('<', 'a', ' ', 'h', 'r', 'e', 'f', '=', '"', 'x', '"', '>', 0xff.toByte, '<', '/', 'a', '>'),
       Array[Byte]('a', 0xc3.toByte), // truncated 2-byte seq
       Array[Byte]('a', 0xe0.toByte, 0x80.toByte, 0x80.toByte, 'b'), // overlong
       Array[Byte]('a', 0xed.toByte, 0xa0.toByte, 0x80.toByte, 'b')) // surrogate
     invalid.zipWithIndex.foreach { case (b, i) =>
-      assert(!graft.functions.Html.isValidUtf8(b), s"vector $i should be invalid")
+      assert(!Html.isValidUtf8(b), s"vector $i should be invalid")
       check(b, s"invalid-$i")
     }
-    assert(graft.functions.Html.isValidUtf8("é漢😀".getBytes(UTF_8)))
-    // whole corpus through both entrypoints
-    pages.select(col("html")).collect().foreach { r =>
-      check(r.getAs[Array[Byte]](0), "corpus")
+    assert(Html.isValidUtf8("é漢😀".getBytes(UTF_8)))
+    pages.select(col("html")).collect().foreach(r => check(r.getAs[Array[Byte]](0), "corpus"))
+  }
+
+  test("U+0130 in tag names: frozen char-fold results") {
+    // Character.toLowerCase folds U+0130 'İ' to 'i', so the frozen X1/X2
+    // semantics read <scrİpt> as a script tag; the oracle's regexes fold
+    // ASCII only and disagree, so these expectations are literal (hrefs,
+    // anchors, text and xxhash64 of the text, from the char-level scanner
+    // that preceded the single byte scanner)
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.functions.Html
+    val cases = Seq(
+      ("<scrİpt>hidden('<a href=\"no\">')</scrİpt><a href=\"yes\">ok</a>",
+        Seq("yes" -> "ok"), "ok", 1719218472297945969L),
+      ("<SCRİPT>x</SCRİPT>visible", Seq.empty, "visible", 1105762535240250419L),
+      ("<a İd=1 href=\"k\">kelvin K anchor</a>",
+        Seq("k" -> "kelvin K anchor"), "kelvin K anchor", -6217299866867898253L),
+      ("<styLE>a{}</style><stİle>not a style tag</stİle>",
+        Seq.empty, "not a style tag", -5115931540108219146L),
+      ("<a href=\"o\">pre <scrİpt>in body</scrİpt> post</a> tail",
+        Seq("o" -> "pre post"), "pre post tail", -2803729254229134506L),
+      ("<scrİpt x=1>a</scrİpt >b</script>c", Seq.empty, "bc", 8405177242434991006L))
+    cases.foreach { case (html, links, text, hash) =>
+      val b = html.getBytes(UTF_8)
+      assert(Html.extractLinks(b).toSeq.map(l => (l.href, l.anchor)) == links, html)
+      assert(Html.extractText(b) == text, html)
+      val scan = Html.scanPageHrefs(b)
+      assert(scan.hrefs.toSeq == links.map(_._1), html)
+      assert(scan.textXxh64 == hash, html)
     }
   }
 
   test("U+0130 and U+212A are the ONLY non-ASCII chars that case-fold to ASCII") {
-    // pins the completeness of Html.hasAsciiCaseFoldingChar: if a future JDK
-    // Unicode update adds a third such char, this fails loudly rather than
-    // letting the byte scanner silently diverge from the char semantics
+    // guards the byte scanner's single non-ASCII tag-name rule (C4 B0 where
+    // a name has 'i'): if a future JDK Unicode update adds a third such char,
+    // this fails loudly rather than letting the scanner silently diverge
+    // from the Character.toLowerCase semantics of X1/X2
     val folding = (0x80 to 0xFFFF).filter { cp =>
       val lc = Character.toLowerCase(cp.toChar)
       lc < 0x80
@@ -169,10 +155,9 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.functions.Html
     def check(bytes: Array[Byte], tag: String): Unit = {
-      val full = Html.scanPageHashed(bytes)
       val hrefs = Html.scanPageHrefs(bytes)
-      assert(hrefs.hrefs.toSeq == full.links.toSeq.map(_.href), s"hrefs [$tag]")
-      assert(hrefs.textXxh64 == full.textXxh64, s"hash [$tag]")
+      assert(hrefs.hrefs.toSeq == Html.extractLinks(bytes).toSeq.map(_.href), s"hrefs [$tag]")
+      assert(hrefs.textXxh64 == xxh64(Html.extractText(bytes)), s"hash [$tag]")
     }
     val strings = Seq(
       "<a href=\"a\">one</a><a href=\"a\">dup</a><a href=\"b\">two</a>",
@@ -208,9 +193,9 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
 
   test("expression pipeline runs inside whole-stage codegen (no fallback)") {
     val df = pages.select(col("url"),
-        CanonExpressions.pageScanCol(col("html")).as("s"))
+        CanonExpressions.pageScanHrefsCol(col("html")).as("s"))
       .select(col("url"), explode(col("s.links")).as("l"))
-      .select(CanonExpressions.resolveCanonCol(col("url"), col("l.href")).as("cp"))
+      .select(CanonExpressions.resolveCanonCol(col("url"), col("l")).as("cp"))
       .where(col("cp").isNotNull)
       .select(col("cp.surt"))
     df.collect() // force execution so codegen actually compiles

@@ -144,9 +144,9 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("X1 generator ≡ UDF on non-byte-route pages (U+0130 tags, invalid UTF-8)") {
     import spark.implicits._
-    // İ (U+0130) lowercases to ASCII 'i': the CHAR route sees <scrİpt> as a
-    // script block and drops its links; the raw byte kernel would not — the
-    // generator must take the same guarded route as the UDF it is pinned to
+    // İ (U+0130) lowercases to ASCII 'i', so X1 sees <scrİpt> as a script
+    // block and drops its links; invalid UTF-8 scans as its re-encode — the
+    // generator must agree with the UDF it is pinned to on both
     val adversarial: Seq[Array[Byte]] = Seq(
       "<scrİpt><a href='/x'>x</a></scrİpt><a href='/y'>y</a>"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8),

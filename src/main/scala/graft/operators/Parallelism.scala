@@ -1,6 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scan-parallelism floor and data-sized partition counts (round 6,
   * optimization guide §2.2/§6).
@@ -29,12 +33,29 @@ object Parallelism {
     * kernels above it use the whole machine (the structural analogue of
     * `spark.sql.files.minPartitionNum`, guide §6). The round-robin exchange
     * only exists when the input is small (few partitions IS the smallness
-    * signal); inputs at or above the default width pass through untouched.
+    * signal); inputs at or above the default width, and inputs whose plan
+    * already holds an exchange (their width is the shuffle's, not the
+    * files'), pass through untouched. Starts no Spark job.
     */
   def floor(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    // the partition count is probed only on an exchange-free plan (a scan,
+    // as at every call site): under AQE, `rdd` of a plan with an exchange
+    // materializes every upstream shuffle stage — jobs before the action
+    if (!hasExchange(df.queryExecution.executedPlan) && df.rdd.getNumPartitions < target)
+      df.repartition(target)
+    else df
   }
+
+  /** Walks into adaptive plans and their query stages. */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** An exchange anywhere below `plan`, cached subplans included. */
+  private def hasExchange(plan: SparkPlan): Boolean = PlanWalk.find(plan) {
+    case _: Exchange => true
+    case s: InMemoryTableScanExec => hasExchange(s.relation.cachedPlan)
+    case _ => false
+  }.isDefined
 
   /** Partition count for ~`rowsPerPart`-row partitions, clamped to
     * [1, default parallelism]: tiny iterated frames collapse to single-task

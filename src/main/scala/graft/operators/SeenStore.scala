@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -37,13 +38,6 @@ private[graft] sealed trait FilterKind extends Serializable {
     * rebuild from the full seen set.
     */
   def saturationLimit: Double
-  /** A filter answering "maybe" for every key — the fail-safe poison value
-    * written when a delta merge meets an incompatible predecessor file
-    * (kind/shape mismatch after a mid-chain switch). Its saturation reads
-    * 1.0, so the same update() call immediately rebuilds from the full
-    * seen set; correctness never depends on the poisoned file.
-    */
-  def poisoned(shape: Long): Array[Long]
 }
 
 private[graft] case object BloomKind extends FilterKind {
@@ -55,11 +49,6 @@ private[graft] case object BloomKind extends FilterKind {
   def merge(a: Array[Long], b: Array[Long]): Array[Long] = Bloom64.merge(a, b)
   def saturation(arr: Array[Long]): Double = Bloom64.saturation(arr)
   val saturationLimit = 0.5
-  def poisoned(shape: Long): Array[Long] = {
-    val arr = Bloom64.emptyBits(shape)
-    java.util.Arrays.fill(arr, 2, arr.length, -1L)
-    arr
-  }
 }
 
 private[graft] case object CuckooKind extends FilterKind {
@@ -73,11 +62,6 @@ private[graft] case object CuckooKind extends FilterKind {
   def merge(a: Array[Long], b: Array[Long]): Array[Long] = Cuckoo64.merge(a, b)
   def saturation(arr: Array[Long]): Double = Cuckoo64.saturation(arr)
   val saturationLimit = Cuckoo64.SaturationLimit
-  def poisoned(shape: Long): Array[Long] = {
-    val arr = Cuckoo64.emptyBuckets(shape)
-    arr(1) |= 1L // overflow flag: mightContain == true for everything
-    arr
-  }
 }
 
 private[graft] object FilterKind {
@@ -108,32 +92,46 @@ class FilterAggregator(kind: FilterKind, shape: Long)
   * path, with a pluggable kernel (bloom default, cuckoo for deletability —
   * see [[FilterKind]]).
   *
-  * One filter per host_bucket, persisted as little-endian longs at
-  * `<seenDir>/_bloom/<version>/bucket-<k>.bloom`. Built and written FROM THE
-  * EXECUTORS: the per-bucket aggregation's result rows (bucket, bits) are
-  * merged with the previous version's file and written directly by the task
-  * that holds them — the filter arrays never round-trip through the driver
-  * (at 10^10 URLs / fpp 1e-3 that would be ~GBs of driver traffic per round).
-  * Only per-bucket saturation scalars are collected, to gate the amortized
-  * doubling rebuild.
+  * One filter per host_bucket, kept as a MERGE-ON-READ chain of little-endian
+  * long files under `<seenDir>/_bloom/<version>/`: `bucket-<k>.bloom` is a
+  * FULL filter, `bucket-<k>.keys` holds the sorted, distinct `url_hash` keys
+  * one steady round added to the bucket. Full filters are written only where
+  * the filter is rebuilt or rewritten — the seed build, a kind switch, an
+  * undersized shape, the saturation doubling, a compaction's forceFull and a
+  * cuckoo expiry deletion — so a steady round's sidecar write grows with its
+  * new keys, not with |seen| (the frontier's delta-commit shape, applied to
+  * the filters). Everything is written FROM THE EXECUTORS by the task that
+  * holds the bucket — filters never round-trip through the driver (at 10^10
+  * URLs / fpp 1e-3 that would be ~GBs of driver traffic per round); only
+  * per-bucket saturation scalars are collected, to gate the doubling rebuild.
   *
-  * Version resolution is per bucket: a delta commit only rewrites the buckets
-  * its delta touched, so the authoritative filter for bucket B at version v
-  * is the NEWEST `bucket-B.bloom` at any version ≤ v (each file covers all
-  * deltas ≤ its version for that bucket, minus any expiry deletions; a
-  * bucket untouched since then gained no entries). No copy-forward, no
-  * full-directory rewrite. Each version's `meta` records `<kind>:<shape>`
-  * (legacy bare numbers parse as bloom), and a probed file is interpreted
-  * under ITS OWN version's kind — mixed chains after a kind switch stay
-  * correct bucket by bucket.
+  * Version resolution is per bucket ([[resolveBucket]]): the filter for
+  * bucket B at version v is the NEWEST `bucket-B.bloom` at any version ≤ v,
+  * with every later `bucket-B.keys` ≤ v re-inserted in version order (on an
+  * empty filter of the first keys version's shape when B has no full file).
+  * A version that did not touch B holds no file for it: B gained no entries.
+  * Each version's `meta` records `<kind>:<shape>` (legacy bare numbers parse
+  * as bloom), and a chain is interpreted under its base version's kind, so
+  * mixed chains after a kind switch stay correct bucket by bucket. Every full
+  * write resets its bucket's chain, and a compaction's forceFull gives every
+  * non-empty bucket a full file at the compacted base: no chain is longer
+  * than the seen table's own delta chain or reaches below that base, which
+  * is what lets retention GC drop whole version dirs below it. A resolved
+  * bloom filter is bit-identical to a one-shot build of the bucket's keys
+  * (OR is order-free); a resolved cuckoo filter holds the same members, its
+  * fingerprints possibly placed differently.
   *
   * Crash consistency: sidecars are written BETWEEN the seen delta's data
-  * write and the snapshot's manifest/CURRENT publish (StateTable.writeSnap /
-  * finalizeCommit), so a committed seen version always has complete sidecars.
-  * The probe is additionally fail-safe: if no filter chain exists at all for
-  * the probed version (legacy state, deleted sidecars), it returns TRUE —
-  * "maybe seen" — routing every candidate to the exact anti-join rather than
-  * re-admitting seen URLs.
+  * write and the round publish, each version's `meta` LAST, so a committed
+  * seen version always has complete sidecars and a version without meta is
+  * invisible to resolution. Every (re)write of a version's sidecars first
+  * clears that version's dir, so a replay after a kill between the meta and
+  * the publish never leaves a `.bloom` and a `.keys` file of one bucket side
+  * by side, nor a file of a bucket the replay does not touch. The probe is
+  * additionally fail-safe: if no filter chain exists at all for the probed
+  * version (legacy state, deleted sidecars), it returns TRUE — "maybe seen" —
+  * routing every candidate to the exact anti-join rather than re-admitting
+  * seen URLs.
   *
   * Probe semantics: mightContain=false ⇒ definitely unseen (admit without
   * touching the exact set); true ⇒ maybe seen ⇒ resolved by the exact
@@ -147,9 +145,12 @@ class FilterAggregator(kind: FilterKind, shape: Long)
   */
 object SeenStore {
 
+  private val FullExt = ".bloom"
+  private val KeysExt = ".keys"
+
   private def bloomDir(seenDir: String, v: Long): Path = Paths.get(seenDir, "_bloom", v.toString)
-  private def bucketFile(seenDir: String, v: Long, bucket: Int): Path =
-    bloomDir(seenDir, v).resolve(s"bucket-$bucket.bloom")
+  private def bucketFile(seenDir: String, v: Long, bucket: Int, ext: String): Path =
+    bloomDir(seenDir, v).resolve(s"bucket-$bucket$ext")
 
   /** Committed sidecar versions, ascending (a version dir with a meta file). */
   private[graft] def bloomVersions(seenDir: String): Seq[Long] = {
@@ -181,17 +182,22 @@ object SeenStore {
   private[graft] def latestMeta(seenDir: String, v: Long): Option[(FilterKind, Long)] =
     bloomVersions(seenDir).filter(_ <= v).lastOption.map(metaOf(seenDir, _))
 
-  private def writeBucket(seenDir: String, v: Long, bucket: Int, bf: Array[Long]): Unit = {
-    val bb = java.nio.ByteBuffer.allocate(bf.length * 8)
+  /** Empty version v's sidecar dir, meta included, before a (re)write. */
+  private def resetDir(seenDir: String, v: Long): Unit = {
+    expireBloom(seenDir, Seq(v))
+    Files.createDirectories(bloomDir(seenDir, v))
+  }
+
+  private def writeLongs(target: Path, longs: Array[Long]): Unit = {
+    val bb = java.nio.ByteBuffer.allocate(longs.length * 8)
     bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bf.foreach(bb.putLong)
-    val target = bucketFile(seenDir, v, bucket)
+    longs.foreach(bb.putLong)
     // tmp name unique PER ATTEMPT: under task retry/speculation two attempts
     // of the same bucket may run concurrently on the shared FS — a fixed tmp
     // name would interleave their writes and the ATOMIC_MOVE could publish a
     // corrupted filter (false negatives ⇒ P4 violation). Each attempt stages
     // to its own file; whichever move lands last wins with complete bytes.
-    // (Bloom attempts carry identical content — deterministic OR; cuckoo
+    // (Keys files and bloom filters are identical across attempts; cuckoo
     // attempts may differ in fingerprint PLACEMENT when partial-agg order
     // differs, but every attempt's table covers the same key set, so either
     // complete file is correct.)
@@ -217,8 +223,7 @@ object SeenStore {
     finally s.close()
   }
 
-  private def readBucketAt(seenDir: String, v: Long, bucket: Int): Option[Array[Long]] = {
-    val p = bucketFile(seenDir, v, bucket)
+  private def readLongs(p: Path): Option[Array[Long]] =
     if (!Files.exists(p)) None
     else {
       val bytes = Files.readAllBytes(p)
@@ -228,89 +233,127 @@ object SeenStore {
       while (i < arr.length) { arr(i) = bb.getLong(); i += 1 }
       Some(arr)
     }
-  }
 
-  /** Newest filter for `bucket` at any version ≤ v, with the version that
-    * owns it (per-bucket resolution; the owning version's meta supplies the
-    * file's kind).
+  /** The filter for `bucket` at version v and the kind it is read under:
+    * the newest full filter ≤ v, with every later keys file ≤ v re-inserted
+    * in version order. None = the chain holds no file for the bucket.
     */
   private[graft] def resolveBucket(
-      seenDir: String, v: Long, bucket: Int): Option[(Long, Array[Long])] = {
-    val vs = bloomVersions(seenDir).filter(_ <= v).reverse
-    vs.iterator
-      .flatMap(bv => readBucketAt(seenDir, bv, bucket).map(bv -> _))
-      .nextOption()
+      seenDir: String, v: Long, bucket: Int): Option[(FilterKind, Array[Long])] = {
+    val newestFirst = bloomVersions(seenDir).filter(_ <= v).reverseIterator
+    var keyVersions = List.empty[Long] // ascending: prepended newest first
+    var base: Option[(FilterKind, Array[Long])] = None
+    while (base.isEmpty && newestFirst.hasNext) {
+      val bv = newestFirst.next()
+      base = readLongs(bucketFile(seenDir, bv, bucket, FullExt)).map(metaOf(seenDir, bv)._1 -> _)
+      if (base.isEmpty && Files.exists(bucketFile(seenDir, bv, bucket, KeysExt)))
+        keyVersions = bv :: keyVersions
+    }
+    val start = base.orElse(keyVersions.headOption.map { kv =>
+      val (kind, shape) = metaOf(seenDir, kv)
+      kind -> kind.empty(shape)
+    })
+    for ((kind, bits) <- start; kv <- keyVersions)
+      readLongs(bucketFile(seenDir, kv, bucket, KeysExt)).get.foreach(kind.put(bits, _))
+    start
   }
 
   /** All buckets resolved at version v — DRIVER-side; tests/tools only, never
     * on the round path.
     */
   def readAll(seenDir: String, v: Long): Map[Int, Array[Long]] = {
-    val vs = bloomVersions(seenDir).filter(_ <= v)
-    if (vs.isEmpty) return Map.empty
-    val buckets = vs.flatMap { bv =>
+    val buckets = bloomVersions(seenDir).filter(_ <= v).flatMap { bv =>
       val s = Files.list(bloomDir(seenDir, bv))
       try s.iterator.asScala.map(_.getFileName.toString).toSeq
       finally s.close()
-    }.filter(_.endsWith(".bloom"))
-      .map(_.stripPrefix("bucket-").stripSuffix(".bloom").toInt).distinct
+    }.collect { case f if f.startsWith("bucket-") && (f.endsWith(FullExt) || f.endsWith(KeysExt)) =>
+      f.stripPrefix("bucket-").takeWhile(_ != '.').toInt
+    }.distinct
     buckets.flatMap(b => resolveBucket(seenDir, v, b).map { case (_, bits) => b -> bits }).toMap
   }
 
-  /** Build per-bucket filters of `df` (given kind + shape) and write them
-    * from the executors, optionally merging each with its newest predecessor
-    * file (≤ mergeUpTo). A predecessor of a DIFFERENT kind or shape (possible
-    * for individual buckets after a mid-chain kind switch) cannot be merged —
-    * the bucket is written POISONED (answers "maybe" for everything), which
-    * reads as saturation 1.0 and makes the caller rebuild from the full seen
-    * set in this same update. Returns the max post-merge saturation (tiny
-    * collect of one double per bucket — the filters themselves stay on the
-    * executors).
+  /** Runs `f(bucket, keys)` on the executors once per host bucket of `df`,
+    * with the bucket's `url_hash` keys sorted and distinct, and collects the
+    * results. Rows are shuffled by bucket and sorted within each partition,
+    * so a task buffers ONE bucket's keys at a time — O(bucket) heap, not an
+    * O(partition) materialization (an expiry selection can be huge).
     */
-  private def buildWrite(
-      df: DataFrame,
-      kind: FilterKind,
-      shape: Long,
-      seenDir: String,
-      newVersion: Long,
-      mergeUpTo: Option[Long]): Double = {
-    Files.createDirectories(bloomDir(seenDir, newVersion))
+  private def perBucketKeys[T: ClassTag](df: DataFrame)(f: (Int, Array[Long]) => T): Array[T] =
+    df.select(col("host_bucket"), col("url_hash"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("host_bucket"))
+      .sortWithinPartitions(col("host_bucket"), col("url_hash"))
+      .rdd.mapPartitions { it =>
+        val rows = it.buffered
+        new Iterator[T] {
+          def hasNext: Boolean = rows.hasNext
+          def next(): T = {
+            val bucket = rows.head.getInt(0)
+            val keys = Array.newBuilder[Long]
+            var last = 0L
+            var first = true
+            while (rows.hasNext && rows.head.getInt(0) == bucket) {
+              val k = rows.next().getLong(1)
+              if (first || k != last) keys += k
+              last = k
+              first = false
+            }
+            f(bucket, keys.result())
+          }
+        }
+      }.collect()
+
+  /** Build full per-bucket filters of `df` at (kind, shape) and write them
+    * from the executors, each resetting its bucket's chain.
+    */
+  private def writeFull(
+      df: DataFrame, kind: FilterKind, shape: Long, seenDir: String, newVersion: Long): Unit = {
+    resetDir(seenDir, newVersion)
     val agg = udaf(new FilterAggregator(kind, shape))
     // explicit repartition after the agg: the result is one row per bucket,
     // so AQE would coalesce the tiny shuffle to ONE partition and a single
-    // task would then read-merge-write every bucket file serially (~1s per
-    // round measured); an explicit width keeps the file IO parallel
-    val perBucket = df.groupBy(col("host_bucket")).agg(agg(col("url_hash")).as("bloom"))
+    // task would then write every bucket file serially (~1s per round
+    // measured); an explicit width keeps the file IO parallel
+    df.groupBy(col("host_bucket")).agg(agg(col("url_hash")).as("bloom"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism, col("host_bucket"))
-    // per-partition imperative sink (the one legitimate RDD drop-down): each
-    // task writes the handful of bucket files its partition holds
-    val sats = perBucket.rdd.mapPartitions { it =>
-      it.map { row =>
-        val bucket = row.getInt(0)
-        val bits = row.getSeq[Long](1).toArray
-        val merged = mergeUpTo.flatMap(resolveBucket(seenDir, _, bucket)) match {
-          case Some((pv, prev)) =>
-            val (prevKind, _) = metaOf(seenDir, pv)
-            if (prevKind == kind && prev.length == bits.length && prev(0) == bits(0))
-              kind.merge(bits, prev)
-            else kind.poisoned(shape)
-          case None => bits
-        }
-        writeBucket(seenDir, newVersion, bucket, merged)
-        kind.saturation(merged)
-      }
-    }.collect()
+      .rdd.foreachPartition(_.foreach { row =>
+        writeLongs(bucketFile(seenDir, newVersion, row.getInt(0), FullExt),
+          row.getSeq[Long](1).toArray)
+      })
+  }
+
+  /** Steady-state delta: write each touched bucket's new keys as
+    * `bucket-<k>.keys` and return the max saturation of the bucket's filter
+    * at `prevVersion` plus those keys. A predecessor of a DIFFERENT kind or
+    * shape (a bucket left unrebuilt across a mid-chain kind switch) reads as
+    * saturation 1.0, so the caller rebuilds from the full seen set in this
+    * same update.
+    */
+  private def writeKeys(
+      delta: DataFrame,
+      kind: FilterKind,
+      shape: Long,
+      seenDir: String,
+      prevVersion: Long,
+      newVersion: Long): Double = {
+    resetDir(seenDir, newVersion)
+    val sats = perBucketKeys(delta) { (bucket, keys) =>
+      writeLongs(bucketFile(seenDir, newVersion, bucket, KeysExt), keys)
+      val (prevKind, bits) =
+        resolveBucket(seenDir, prevVersion, bucket).getOrElse(kind -> kind.empty(shape))
+      if (prevKind != kind || bits(0) != shape) 1.0
+      else { keys.foreach(kind.put(bits, _)); kind.saturation(bits) }
+    }
     if (sats.isEmpty) 0.0 else sats.max
   }
 
-  /** Incremental update: build delta filters AT THE PREVIOUS SHAPE and merge
-    * them into the per-bucket chain (one aggregation over the delta only —
-    * never a full-seen rescan in the steady state). A missing chain (first
-    * commit, or a legacy/crashed sidecar), a KIND switch (cfg.seenFilter ≠
-    * the chain's recorded kind), and an undersized or saturated generation
-    * each trigger one amortized rebuild from `fullSeen` at the next
-    * power-of-two shape. The version's meta marker is written LAST — a
-    * version without meta is invisible to resolution and re-built on replay.
+  /** Incremental update: a steady round writes only its delta's keys at the
+    * previous shape (one sort of the delta — never a full-seen rescan). A
+    * missing chain (first commit, or a legacy/crashed sidecar), a KIND switch
+    * (cfg.seenFilter ≠ the chain's recorded kind), and an undersized or
+    * saturated generation each trigger one amortized full rebuild from
+    * `fullSeen` at the next power-of-two shape. The version's meta marker is
+    * written LAST — a version without meta is invisible to resolution and
+    * re-built on replay.
     */
   def update(
       spark: SparkSession,
@@ -325,51 +368,40 @@ object SeenStore {
     val kind = FilterKind(cfg.seenFilter)
     val wantShape = kind.optimalShape(math.max(1024L, expectedPerBucket), cfg.bloomFpp)
     val prevMeta = prevVersion.flatMap(latestMeta(seenDir, _))
+    def full(shape: Long): Long = { writeFull(fullSeen, kind, shape, seenDir, newVersion); shape }
     val shape = if (forceFull) {
       // compaction rounds force a full rebuild: every non-empty bucket gets a
       // file AT this version, so sidecar dirs below a compacted base are
       // fully shadowed and become GC-able together with their data snapshots
       val same = prevMeta.collect { case (pk, ps) if pk == kind => ps }
-      val s = math.max(wantShape, same.getOrElse(wantShape))
-      buildWrite(fullSeen, kind, s, seenDir, newVersion, mergeUpTo = None)
-      s
+      full(math.max(wantShape, same.getOrElse(wantShape)))
     } else prevMeta match {
-      case None =>
-        // no usable chain: rebuild from the FULL seen set (delta alone would
-        // under-cover when prior seen versions exist — fail-safe rebuild)
-        buildWrite(fullSeen, kind, wantShape, seenDir, newVersion, mergeUpTo = None)
-        wantShape
-      case Some((prevKind, _)) if prevKind != kind =>
-        // kind switch: the old chain's files are unmergeable — one full
-        // rebuild re-covers every bucket under the new kind
-        buildWrite(fullSeen, kind, wantShape, seenDir, newVersion, mergeUpTo = None)
-        wantShape
-      case Some((_, ps)) if wantShape > ps =>
-        val s = math.max(wantShape, ps * 2)
-        buildWrite(fullSeen, kind, s, seenDir, newVersion, mergeUpTo = None)
-        s
+      // no usable chain: rebuild from the FULL seen set (delta alone would
+      // under-cover when prior seen versions exist — fail-safe rebuild)
+      case None => full(wantShape)
+      // kind switch: the old chain's filters cannot take the new kind's
+      // keys — one full rebuild re-covers every bucket under the new kind
+      case Some((prevKind, _)) if prevKind != kind => full(wantShape)
+      case Some((_, ps)) if wantShape > ps => full(math.max(wantShape, ps * 2))
       case Some((_, ps)) =>
-        val sat = buildWrite(delta, kind, ps, seenDir, newVersion, mergeUpTo = prevVersion)
-        if (sat > kind.saturationLimit) {
-          val s = ps * 2
-          buildWrite(fullSeen, kind, s, seenDir, newVersion, mergeUpTo = None)
-          s
-        } else ps
+        val sat = writeKeys(delta, kind, ps, seenDir, prevVersion.get, newVersion)
+        if (sat > kind.saturationLimit) full(ps * 2) else ps
     }
     cleanOrphanTmps(seenDir, newVersion)
     Files.writeString(bloomDir(seenDir, newVersion).resolve("meta"), s"${kind.name}:$shape")
   }
 
   /** Delete expired keys from the sidecar chain at a recrawl expiry commit
-    * (D5). Cuckoo arm: each touched bucket's resolved filter is cloned, the
-    * expired fingerprints removed, and the result written at `newVersion` —
-    * O(expired) work, executor-side, and the fast path stays tight. Bloom
-    * arm (or no chain): a deliberate NO-OP — bloom cannot forget, and its
-    * stale positives are fail-safe (the exact anti-join, which reads the
-    * tombstoned seen table, resolves them to "unseen"); the next amortized
-    * rebuild drops them from the bits. Deletion is only sound for keys
-    * actually present in the seen set — the caller semi-joins its selector
-    * against seen before calling (see Recrawl).
+    * (D5). Cuckoo arm: each touched bucket's resolved filter has the expired
+    * fingerprints removed and is written at `newVersion` as a FULL filter
+    * (resetting the bucket's chain) — O(expired) work, executor-side, and the
+    * fast path stays tight. Bloom arm (or no chain): a deliberate NO-OP —
+    * bloom cannot forget, and its stale positives are fail-safe (the exact
+    * anti-join, which reads the tombstoned seen table, resolves them to
+    * "unseen"); the next amortized rebuild drops them from the bits.
+    * Deletion is only sound for keys actually present in the seen set — the
+    * caller semi-joins its selector against seen before calling (see
+    * Recrawl).
     */
   def deleteFromSidecars(
       spark: SparkSession,
@@ -379,36 +411,17 @@ object SeenStore {
       expired: DataFrame): Unit = {
     latestMeta(seenDir, prevVersion) match {
       case Some((kind, shape)) if kind == CuckooKind =>
-        Files.createDirectories(bloomDir(seenDir, newVersion))
-        // sorted within each partition so rows arrive clustered by bucket:
-        // the task buffers ONE bucket's keys at a time — O(bucket) heap, not
-        // an O(partition) toSeq+groupBy materialization (expiry selections
-        // can be huge: this is the years-of-crawling aging primitive)
-        val touched = expired.select(col("host_bucket"), col("url_hash"))
-          .repartition(spark.sparkContext.defaultParallelism, col("host_bucket"))
-          .sortWithinPartitions(col("host_bucket"))
-        touched.rdd.mapPartitions { it =>
-          val rows = it.buffered
-          new Iterator[Int] {
-            def hasNext: Boolean = rows.hasNext
-            def next(): Int = {
-              val bucket = rows.head.getInt(0)
-              val keys = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (rows.hasNext && rows.head.getInt(0) == bucket)
-                keys += rows.next().getLong(1)
-              resolveBucket(seenDir, prevVersion, bucket).foreach { case (pv, bits) =>
-                val (pk, _) = metaOf(seenDir, pv)
-                if (pk == CuckooKind) {
-                  val copy = bits.clone()
-                  keys.foreach(k => Cuckoo64.delete(copy, k))
-                  writeBucket(seenDir, newVersion, bucket, copy)
-                }
-                // non-cuckoo legacy bucket: leave it — stale positives are safe
-              }
-              bucket
+        resetDir(seenDir, newVersion)
+        perBucketKeys(expired) { (bucket, keys) =>
+          resolveBucket(seenDir, prevVersion, bucket).foreach { case (pk, bits) =>
+            if (pk == CuckooKind) {
+              keys.foreach(Cuckoo64.delete(bits, _))
+              writeLongs(bucketFile(seenDir, newVersion, bucket, FullExt), bits)
             }
+            // non-cuckoo legacy bucket: leave it — stale positives are safe
           }
-        }.count()
+          bucket
+        }
         cleanOrphanTmps(seenDir, newVersion)
         Files.writeString(bloomDir(seenDir, newVersion).resolve("meta"), s"${kind.name}:$shape")
       case _ => () // bloom chain or no chain: stale positives are fail-safe
@@ -417,8 +430,8 @@ object SeenStore {
 
   /** GC the sidecar dirs of expired data versions. Only called with versions
     * StateTable.expire already deleted — i.e. versions below a compacted
-    * base, whose forceFull rebuild gives every non-empty bucket a file at
-    * the base, so no retained probe can resolve to a deleted file.
+    * base, whose forceFull rebuild gives every non-empty bucket a full file
+    * at the base, so no retained probe's chain reaches a deleted file.
     */
   def expireBloom(seenDir: String, deadVersions: Seq[Long]): Unit =
     deadVersions.foreach { v =>
@@ -447,7 +460,7 @@ object SeenStore {
 private[graft] object BloomProbe {
 
   private final case class Key(dir: String, version: Long, bucket: Int)
-  // value: Loaded = filter + its owning version's kind; FailSafe = no chain
+  // value: Loaded = resolved filter + its chain's kind; FailSafe = no chain
   // (treat as maybe-seen); Empty = chain exists, bucket has no entries
   // (definitely unseen)
   private final case class Loaded(kind: FilterKind, bits: Array[Long])
@@ -472,16 +485,12 @@ private[graft] object BloomProbe {
     }
   }
 
-  private def load(seenDir: String, version: Long, bucket: Int): AnyRef = {
-    val vs = SeenStore.bloomVersions(seenDir).filter(_ <= version)
-    if (vs.isEmpty) FailSafe
+  private def load(seenDir: String, version: Long, bucket: Int): AnyRef =
+    if (!SeenStore.bloomVersions(seenDir).exists(_ <= version)) FailSafe
     else SeenStore.resolveBucket(seenDir, version, bucket) match {
-      case Some((ownerV, bits)) =>
-        val (kind, _) = SeenStore.metaOf(seenDir, ownerV)
-        Loaded(kind, bits)
+      case Some((kind, bits)) => Loaded(kind, bits)
       case None => Empty
     }
-  }
 
   private[graft] def clear(): Unit = cache.clear()
 }

@@ -149,6 +149,10 @@ class RecrawlSpec extends AnyFunSuite with SparkTestSession {
       val dir = tmpDir(s"crawl-ex-$kind")
       Crawler.crawl(spark, dir, pages, robots, seeds, cfgK, 4)
       val sDir = CrawlRound.seenDir(dir)
+      // the chain the expiry starts from carries keys deltas
+      val vBefore = StateTable.currentVersion(sDir).get
+      assert((1L to vBefore).exists(sidecarFiles(sDir, _).exists(_.endsWith(".keys"))),
+        s"$kind: no keys delta before the expiry — the chain was never crossed")
       val fetched = StateTable.readAppended(spark, CrawlRound.fetchLogDir(dir),
         schema = Some(graft.model.Schemas.fetchLog))
         .where(col("status") === 200).select("surt").distinct()
@@ -170,10 +174,13 @@ class RecrawlSpec extends AnyFunSuite with SparkTestSession {
       }
       val expiredRows = seenRows.filter(t => expired(t._1))
       val staleTrue = expiredRows.count { case (_, b, h) => kindObj.mightContain(filters(b), h) }
-      if (kind == "cuckoo")
-        assert(staleTrue <= expiredRows.length / 10,
+      if (kind == "cuckoo") {
+        assert(staleTrue == 0,
           s"cuckoo fast path not tightened: $staleTrue/${expiredRows.length} expired still probe true")
-      else
+        // the deletion wrote full filters, resetting every touched chain
+        assert(sidecarFiles(sDir, v).exists(_.endsWith(".bloom")) &&
+          !sidecarFiles(sDir, v).exists(_.endsWith(".keys")))
+      } else
         assert(staleTrue == expiredRows.length,
           "bloom cannot forget — expired entries must remain (fail-safe) positives")
       // the crawl continues, re-discovers expired URLs via links, and

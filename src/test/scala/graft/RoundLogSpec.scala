@@ -78,6 +78,9 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     StateTable.readAppended(spark, CrawlRound.seenDir(dir))
       .select("surt").collect().map(_.getString(0)).toSet
 
+  private def filtersOf(dir: String, v: Long) =
+    graft.operators.SeenStore.readAll(CrawlRound.seenDir(dir), v).map { case (b, f) => b -> f.toSeq }
+
   /** An r4-era state dir: rewrite every round-log version as four per-table
     * manifests + CURRENTs (exactly what finalizeCommit wrote), then drop the
     * round log. Converts a fresh crawl into the legacy layout so migration
@@ -145,6 +148,18 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     // snap dirs, dels and bloom sidecars at v4 become unreferenced orphans
     Files.delete(Paths.get(dir, "_round_log", "4.json"))
     Files.writeString(Paths.get(dir, "_round_log", "CURRENT"), "3")
+    // the kill lands after v4's sidecar keys files AND meta were written
+    val sDir = CrawlRound.seenDir(dir)
+    val keys4 = sidecarFiles(sDir, 4L).filter(_.endsWith(".keys"))
+    assert(keys4.nonEmpty && sidecarFiles(sDir, 4L).contains("meta"), "v4 wrote no keys delta")
+    // and a stale full filter (all bits clear) sits at v4 beside the keys of
+    // a bucket the replay writes again: were it kept, v4 would resolve that
+    // bucket to nothing
+    val stale = keys4.head.stripSuffix(".keys") + ".bloom"
+    val zeros = graft.functions.Bloom64.emptyBits(graft.operators.SeenStore.metaOf(sDir, 4L)._2)
+    val buf = java.nio.ByteBuffer.allocate(zeros.length * 8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    zeros.foreach(buf.putLong)
+    Files.write(Paths.get(sDir, "_bloom", "4", stale), buf.array())
     // fresh JVM state: a real crash starts a new driver, so the write-through
     // manifest cache must not resurrect the deleted commit point here
     RoundLog.clearCache()
@@ -153,6 +168,10 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     assert(resumed.map(_.round) == Seq(4L, 5L))
     assert(frontierOf(dir) == frontierOf(dUninterrupted))
     assert(seenOf(dir) == seenOf(dUninterrupted))
+    assert(!sidecarFiles(sDir, 4L).contains(stale), "replay kept the stale full filter")
+    (0L to 5L).foreach { v =>
+      assert(filtersOf(dir, v) == filtersOf(dUninterrupted, v), s"resolved filters differ at v$v")
+    }
   }
 
   test("migration: r4-era per-table state dir resumes under round-log commits") {

@@ -12,9 +12,11 @@ import java.nio.file.{Files, Paths}
   *    rep, report min/median; `all` runs the full suite once in bench order.
   *  - `noop q1,q2,.. [reps]` — same but through the noop sink (guide §1.4):
   *    every column of every row computed, no count-only pruning.
-  *  - `stages q` — run one query with a [[TimingListener]] so the per-stage
-  *    wall/task and per-job wall/gap breakdown is visible on stderr, plus
-  *    the codegen compile count and time.
+  *  - `stages q [reps]` — run one query with a [[TimingListener]] so the
+  *    per-stage wall/task and per-job wall/gap breakdown is visible on
+  *    stderr, plus the codegen compile count and time. `reps - 1` unprinted
+  *    warm passes run first (default 1: the cold pass only), so the
+  *    breakdown can describe a warm pass like the benchmark's timed ones.
   *  - `dataflow [pct]` — one frontier-expansion rep on the bench corpus with
   *    every physical operator's metrics (needs SPARK_GRAFT_BENCH_CORPUS).
   *  - `dfab [pct]` — ablation ladder over that rep, one layer per rung.
@@ -72,10 +74,8 @@ object BenchExtra {
 
       case "stages" =>
         val n = args(1)
+        val reps = if (args.length > 2) args(2).toInt else 1
         val spark = Bench.session(cpus)
-        // GRAFT_TIMING=2 already attached one
-        if (!sys.env.get("GRAFT_TIMING").contains("2"))
-          spark.sparkContext.addSparkListener(new TimingListener(System.err))
         def codegenStats(): (Long, Long) = {
           import org.apache.spark.metrics.source.CodegenMetrics
           (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
@@ -86,6 +86,11 @@ object BenchExtra {
           spark.read.parquet(s"$sfDir/lineitem.parquet")
             .groupBy(col("l_returnflag")).agg(count(col("l_orderkey"))).count()
         } catch { case _: Throwable => () }
+        (1 until reps).foreach(_ => all(n)(spark, sfDir).count())
+        // attached after the warm passes so only the measured one prints
+        // (GRAFT_TIMING=2 already attached one that prints every pass)
+        if (!sys.env.get("GRAFT_TIMING").contains("2"))
+          spark.sparkContext.addSparkListener(new TimingListener(System.err))
         val (c0, t0c) = codegenStats()
         System.err.println(s"---- stages of $n ----")
         val t0 = System.nanoTime()

@@ -307,8 +307,13 @@ object StateTable {
       // no distinct on the build side: an anti-join tolerates duplicate keys,
       // and a key is tombstoned at most once while it is live (a re-added key
       // may be tombstoned again LATER — distinct sequence numbers, both kept)
+      // read with the key's field from the table schema when there is one:
+      // a schemaless read starts a schema-inference job per dels version
+      val delsReader = schema
+        .map(s => spark.read.schema(org.apache.spark.sql.types.StructType(Seq(s(keyCol)))))
+        .getOrElse(spark.read)
       val dels = delVs.map { dv =>
-        spark.read.parquet(delPath(dir, dv))
+        delsReader.parquet(delPath(dir, dv))
           .select(col(keyCol).as("__del_key"), lit(dv).as("__del_seq"))
       }.reduce(_ unionByName _)
       val build = if (delsIn(dir, vs) <= broadcastMaxDels) broadcast(dels) else dels

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,42 +8,6 @@ import graft.operators.Parallelism
 
 /** `Parallelism.floor` decides from the plan alone: it starts no Spark job. */
 class ParallelismSpec extends AnyFunSuite with SparkTestSession {
-
-  /** Jobs `body` starts, counted by a listener on the job group. A one-task
-    * marker job closes the count: the bus delivers events in order, so once
-    * the marker has ended every job `body` started has been seen.
-    */
-  private def jobsStartedBy[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = "graft-parallelism-spec"
-    val started = new AtomicInteger(0)
-    val markerDone = new CountDownLatch(1)
-    val listener = new SparkListener {
-      @volatile private var markerId = -1
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = j.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
-          if (p.getProperty("graft.marker") != null) markerId = j.jobId
-          else started.incrementAndGet()
-        }
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (j.jobId == markerId) markerDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = body
-      sc.setLocalProperty("graft.marker", "1")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerDone.await(60, TimeUnit.SECONDS), "marker job end never arrived")
-      (out, started.get)
-    } finally {
-      sc.setLocalProperty("graft.marker", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
 

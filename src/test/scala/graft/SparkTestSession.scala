@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites (sbt forks a single
@@ -16,6 +20,43 @@ trait SparkTestSession {
   lazy val spark: SparkSession = SparkTestSession.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+  /** Jobs `body` starts, counted by a listener on the job group. A one-task
+    * marker job closes the count: the bus delivers events in order, so once
+    * the marker has ended every job `body` started has been seen.
+    */
+  def jobsStartedBy[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = "graft-job-count"
+    val started = new AtomicInteger(0)
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerId = -1
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+          if (p.getProperty("graft.marker") != null) markerId = j.jobId
+          else started.incrementAndGet()
+        }
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == markerId) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = body
+      sc.setLocalProperty("graft.marker", "1")
+      sc.parallelize(Seq(1), 1).count()
+      if (!markerDone.await(60, TimeUnit.SECONDS))
+        throw new AssertionError("marker job end never arrived")
+      (out, started.get)
+    } finally {
+      sc.setLocalProperty("graft.marker", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** File names in a seen table's sidecar dir at version v (none if absent). */
   def sidecarFiles(seenDir: String, v: Long): Seq[String] = {
     val d = java.nio.file.Paths.get(seenDir, "_bloom", v.toString)

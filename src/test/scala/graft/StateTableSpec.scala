@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.CrawlRound
 import graft.sources.StateTable
 
 /** S3/S4 snapshot protocol: atomic commit, time travel, crash injection. */
@@ -103,6 +106,38 @@ class StateTableSpec extends AnyFunSuite with SparkTestSession {
     assert(atAd(0L) == Seq("a", "b"))
     assert(atAd(1L) == Seq("b"))
     assert(atAd(2L) == Seq("a", "b", "c"), "all-delta chain: re-add survives")
+  }
+
+  test("merge-on-read with a table schema starts no job before the action") {
+    // each shape carries two tombstone versions; with the table's schema
+    // given, building the read must not infer the dels files' schema
+    def front(surts: Seq[String]) =
+      surts.map(s => (s, s"http://$s/", s, 0, s.length.toLong, 1, 0.5, 0L, ""))
+        .toDF(graft.model.Schemas.frontier.fieldNames.toIndexedSeq: _*)
+    def delta(dir: String, v: Long, news: DataFrame, dels: Seq[String]): Unit = {
+      val n = StateTable.writeSnap(news, dir, v, partitioned = false)
+      val nd = StateTable.writeDels(dels.toDF("surt"), dir, v)
+      StateTable.finalizeCommit(dir, v, v, n, Map(StateTable.DelsCounter -> nd))
+    }
+    val state = tmpDir("st-mor-jobs")
+    val fDir = CrawlRound.frontierDir(state)
+    StateTable.commit(front(Seq("a", "b", "c")), fDir, 0L, 0L, partitioned = false)
+    delta(fDir, 1L, front(Seq("d")), Seq("a"))
+    delta(fDir, 2L, front(Seq("e")), Seq("b", "d"))
+    val (frontier, fJobs) = jobsStartedBy(CrawlRound.readFrontier(spark, state, Some(2L)))
+    assert(fJobs == 0, s"building the frontier read started $fJobs job(s)")
+    assert(frontier.select("surt").as[String].collect().sorted.toSeq == Seq("c", "e"))
+
+    // the seen table's all-delta chain
+    val sDir = tmpDir("st-mor-jobs-seen")
+    val seenSchema = StructType(Seq(StructField("surt", StringType)))
+    StateTable.commitAppend(Seq("a", "b").toDF("surt"), sDir, 0L, 0L)
+    delta(sDir, 1L, Seq("c").toDF("surt"), Seq("a"))
+    delta(sDir, 2L, Seq("d").toDF("surt"), Seq("c"))
+    val (seen, sJobs) = jobsStartedBy(
+      StateTable.readAppendedMerged(spark, sDir, Some(2L), Some(seenSchema)))
+    assert(sJobs == 0, s"building the seen read started $sJobs job(s)")
+    assert(seen.select("surt").as[String].collect().sorted.toSeq == Seq("b", "d"))
   }
 
   test("append-mode read unions deltas") {

@@ -149,17 +149,9 @@ final case class CrawlConfig(
     // folds the chain into a full base on the same geometric policy as the
     // seen table. false = rewrite the full frontier every round (the
     // round-1..3 behavior, kept for the delta ≡ full equivalence test).
+    // No knob sets a commit's file count: each delta write coalesces to its
+    // row bound (CrawlRound's S4 width rule) and compactions keep their width.
     frontierDeltaCommits: Boolean = true,
-    // small-table commit width: host_state (when its manifest proves it
-    // small) and the per-round fetch-log delta (≤ roundBudget rows by
-    // construction) coalesce to this many output files per snapshot,
-    // INDEPENDENT of compute width. Without the cap, shuffle.partitions ==
-    // cores makes every tiny commit write `cores` near-empty parquet files —
-    // per-round commit overhead that grows with width and never amortizes
-    // (the round-3 width profile showed 64-task ~0.5s-per-task writes of
-    // ~1.5k-row host_state partitions). Big tables (frontier, compacted
-    // chains) keep full width — their write parallelism is real work.
-    commitWriteParallelism: Int = 8,
     // robots arm gate: up to this many hosts the policy map is collected and
     // broadcast (the contract's "robots.txt cache as a broadcast map" — O(1)
     // map-side probe, no join shuffle; ~1M hosts ≈ low-hundreds MB driver

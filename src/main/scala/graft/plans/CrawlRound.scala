@@ -27,7 +27,8 @@ import graft.sources.{RoundLog, StateTable}
   * → D1 in-batch dedup + A3 OPIC sum                  [shuffle: by surt]
   * → D2 bloom prefilter (map-side) → D3 exact anti-join vs url_seen
   * → O3 carried = frontier broadcast-anti admitted (narrow scan, no shuffle)
-  * → union new → commit snapshots v+1 (S4, FLAT — no write repartition)
+  * → union new → commit snapshots v+1 (S4, FLAT — no write repartition;
+  *   each delta sized by its row bound — the width rule at run's S4 writes)
   * }}}
   *
   * Scale notes baked in: `pages` is only touched through (url, html) — column
@@ -45,8 +46,9 @@ import graft.sources.{RoundLog, StateTable}
   * the admission count (which also materializes the ranked frontier cache) —
   * before the four snapshot DATA writes run concurrently; those writes are
   * what materializes the shared fetch → candidates → dedup caches, the
-  * candidate/new counters are then read back as cache-hit counts, and the
-  * four manifests publish last (round 4: the former union-of-aggregates
+  * candidate counter is then read back as a cache-hit count (new_urls is
+  * the seen delta's footer count in a steady round), and the four
+  * manifests publish last (round 4: the former union-of-aggregates
   * stats barrier was the largest width-insensitive fixed cost in the
   * committed profile). Fetch counters (admitted rows, 200s) ride the
   * fetch-log write itself via `Dataset.observe`, costing no extra job.
@@ -128,7 +130,11 @@ object CrawlRound {
     * `defaultParallelism` instead of inheriting the corpus scan's bucket
     * count (64 on a bucketed corpus). Every stage downstream of the root —
     * fetch log, candidate generation, seen and frontier commits — then runs
-    * cores-wide, not 64 near-empty tasks wide. `coalesce`, not `repartition`:
+    * at most cores-wide, not 64 near-empty tasks wide; the delta commits
+    * narrow further to their row bound (the S4 width rule in [[run]]). The
+    * root is persisted, so those narrower writes read it from a cache that
+    * AQE builds in its own stage at the root's width: the page-scan kernel
+    * keeps `defaultParallelism` tasks. `coalesce`, not `repartition`:
     * coalesce concatenates whole scan partitions in a fixed order, so rows
     * reach the OPIC `sum(contrib)` in the same order and every stored score
     * stays bit-identical; a round-robin repartition reorders them and moves
@@ -234,17 +240,6 @@ object CrawlRound {
 
   /** J4 host_state broadcast budget (rows). */
   private[graft] val hostStateBroadcastMaxRows = 65536L
-
-  /** host_state rows below which its snapshot write coalesces to
-    * `cfg.commitWriteParallelism` files (≈ a few hundred MB at slim-row
-    * sizes). The gate reads the PREVIOUS round's manifest — fail-safe
-    * direction is FULL WIDTH (an unknown-size table keeps its parallel
-    * write), mirroring [[chooseBroadcastHostState]]'s missing-manifest rule.
-    */
-  private[graft] val smallCommitMaxRows = 4194304L
-
-  private[graft] def chooseCoalescedCommit(manifestRows: Option[Long]): Boolean =
-    manifestRows.exists(_ <= smallCommitMaxRows)
 
   /** J4 arm choice — fail-safe direction is DISTRIBUTED, same as
     * [[chooseBroadcastAnti]]: a MISSING host_state manifest (crashed or
@@ -356,10 +351,9 @@ object CrawlRound {
     // Bounded top-⌈burst⌉ aggregation instead of a window rank: the frontier
     // is scanned, never shuffled or sorted (see admitCandidates) ----
     val hostStateSlim = hostState.select(col("host"), col("tokens"), col("last_round"))
+    val prevHostRows = StateTable.manifest(hostStateDir(stateDir), prevV).map(_.nRows)
     val admitCand = admitCandidates(
-        frontier, hostStateSlim,
-        chooseBroadcastHostState(
-          StateTable.manifest(hostStateDir(stateDir), prevV).map(_.nRows)),
+        frontier, hostStateSlim, chooseBroadcastHostState(prevHostRows),
         attachDelay, cfg, round)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // In the politeness-bound regime (token admissions ≤ K, the steady state)
@@ -449,12 +443,15 @@ object CrawlRound {
     // ---- D3 exact anti-join, SIZE-GATED (adaptive: the previous round's
     // candidate volume, from the frontier manifest, picks the arm; missing
     // counter or spike headroom exceeded → distributed, the fail-safe arm) ----
-    val prevCandidates = StateTable.manifest(frontierDir(stateDir), prevV)
-      .flatMap(_.counters.get("candidates"))
+    val prevCounters = StateTable.manifest(frontierDir(stateDir), prevV)
+      .map(_.counters).getOrElse(Map.empty)
+    val prevCandidates = prevCounters.get("candidates")
     val resolvedNew =
       exactAntiJoin(needExact, seen, chooseBroadcastAnti(prevCandidates, cfg.exactAntiBroadcastMaxRows))
     val newEntries = definitelyNew.unionByName(resolvedNew)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // row bound for this round's new-URL deltas (see the S4 width rule)
+    val newRowsBound = prevCounters.get("new_urls").map(_ * candidateGrowthMargin)
 
     // ---- O3 next frontier = (frontier − admitted) ∪ new. carried = a narrow
     // broadcast left_anti of the frontier scan against the ≤K admitted surts
@@ -501,7 +498,23 @@ object CrawlRound {
     // (no per-table partial states), Resume's min rule degenerates to the
     // one round pointer, and the seen table's bloom sidecars are still
     // written BEFORE the publish, so a committed version always has
-    // complete sidecars. ----
+    // complete sidecars.
+    //
+    // Width rule: each DELTA write coalesces to Parallelism.partsFor its row
+    // bound — one file per ~1M rows, so a steady round writes one file per
+    // delta at any session width. Bounds: the fetch log and the frontier
+    // tombstones hold exactly nAdmitted rows; host_state at most the previous
+    // manifest's rows + nAdmitted; the seen delta and the frontier news the
+    // previous round's new_urls × candidateGrowthMargin (the same lagging
+    // estimate and spike headroom the D3 gate uses). A missing manifest or
+    // counter (round 1, a maintenance version, a legacy dir) gives no bound,
+    // and the write keeps its upstream width — the fail-safe direction, as
+    // for every size gate here. Compaction writes keep their width too. Each
+    // coalesce sits on a persisted frame (fetch root, newEntries, admitCand,
+    // hostState), so AQE still materializes those caches in their own
+    // full-width stages — the page-scan kernel is never pulled into one
+    // write task — and every coalesce is downstream of the OPIC
+    // sum(contrib), whose row order it therefore cannot change. ----
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -521,15 +534,14 @@ object CrawlRound {
         // the log chain on the hot path), so it only runs under retention
         val compactLog = cfg.retentionVersions > 0 &&
           StateTable.shouldCompact(fetchLogDir(stateDir), prevV, cfg.compactEvery)
-        // the per-round delta is ≤ roundBudget rows by construction: write
-        // it at the fixed small-table width, not one near-empty file per
-        // core (see CrawlConfig.commitWriteParallelism). Compacted chains
-        // can be arbitrarily large — they keep full write parallelism.
-        val logData =
-          if (!compactLog) fetchLog.coalesce(cfg.commitWriteParallelism)
-          else StateTable.readAppended(spark, fetchLogDir(stateDir), Some(prevV),
-            Some(graft.model.Schemas.fetchLog)).unionByName(fetchLog)
-        val n = StateTable.writeSnap(logData, fetchLogDir(stateDir), version, partitioned = false)
+        // the per-round delta is exactly the nAdmitted fetched rows;
+        // compacted chains can be arbitrarily large and keep their width
+        val (logData, logRows) =
+          if (!compactLog) (fetchLog, Some(nAdmitted))
+          else (StateTable.readAppended(spark, fetchLogDir(stateDir), Some(prevV),
+            Some(graft.model.Schemas.fetchLog)).unionByName(fetchLog), None)
+        val n = StateTable.writeSnap(logData, fetchLogDir(stateDir), version,
+          partitioned = false, maxRows = logRows)
         val n200 = fetchObs.get("n200").asInstanceOf[Long]
         Some((n, n200, compactLog))
       }
@@ -542,8 +554,10 @@ object CrawlRound {
         // chain into one snapshot so the every-round readAppended plans O(few)
         // directories however long the crawl runs; the bloom rebuild rides it
         val compact = StateTable.shouldCompact(seenDir(stateDir), prevV, cfg.compactEvery)
-        val data = if (compact) seen.unionByName(newSeen) else newSeen
-        val n = StateTable.writeSnap(data, seenDir(stateDir), version, partitioned = false)
+        val (data, rows) =
+          if (compact) (seen.unionByName(newSeen), None) else (newSeen, newRowsBound)
+        val n = StateTable.writeSnap(data, seenDir(stateDir), version,
+          partitioned = false, maxRows = rows)
         val totalSeen = if (compact) n else StateTable.totalRows(seenDir(stateDir), prevV) + n
         SeenStore.update(
           spark, seenDir(stateDir), Some(prevV), version,
@@ -588,11 +602,9 @@ object CrawlRound {
           Some((n, None))
         } else {
           val n = StateTable.writeSnap(newEntries.select(frontierCols.map(col): _*),
-            frontierDir(stateDir), version, partitioned = false)
-          // tombstones ≤ roundBudget rows by construction → fixed width
-          val nd = StateTable.writeDels(
-            admittedKeys.coalesce(cfg.commitWriteParallelism),
-            frontierDir(stateDir), version)
+            frontierDir(stateDir), version, partitioned = false, maxRows = newRowsBound)
+          val nd = StateTable.writeDels(admittedKeys, frontierDir(stateDir), version,
+            maxRows = Some(nAdmitted))
           Some((n, Some(nd)))
         }
       }
@@ -602,18 +614,12 @@ object CrawlRound {
     // AQE coalesces the tiny repartition to one partition, whose one task
     // then writes all 64 bucket dirs serially (the write-amplification the
     // layout was supposed to avoid, reintroduced at small row counts).
-    // Round 4: when the manifest proves the table small, the write
-    // coalesces to the fixed small-table width instead of one near-empty
-    // file per core (width-insensitive commit floor, round-3 verdict #1).
+    // The next state holds at most the previous rows + one per admission.
     val hostWrite: Future[Option[Long]] = Future {
       tagged(s"commit:host_state r$round") {
       if (StateTable.alreadyCommitted(hostStateDir(stateDir), version).isDefined) None
-      else Some(StateTable.writeSnap(
-        if (chooseCoalescedCommit(
-            StateTable.manifest(hostStateDir(stateDir), prevV).map(_.nRows)))
-          nextHostState.coalesce(cfg.commitWriteParallelism)
-        else nextHostState,
-        hostStateDir(stateDir), version, partitioned = false))
+      else Some(StateTable.writeSnap(nextHostState, hostStateDir(stateDir), version,
+        partitioned = false, maxRows = prevHostRows.map(_ + nAdmitted)))
     } }
     val (fetchLogRes, seenRes, frontierRes, hostRes) = (
       Await.result(fetchLogWrite, Duration.Inf),
@@ -624,9 +630,14 @@ object CrawlRound {
 
     // ---- counters (M1): cache-hit counts over the data the writes just
     // materialized (a replayed round recomputes them, as the old stats
-    // barrier did) ----
+    // barrier did). A steady seen delta holds exactly the newEntries rows,
+    // so its footer count is new_urls; a compaction (seen ∪ new) or a
+    // replayed seen write counts the cache instead ----
     val nCands = cands.count()
-    val nNew = newEntries.count()
+    val nNew = seenRes match {
+      case Some((n, false)) => n
+      case _ => newEntries.count()
+    }
     mark("stats")
     val counters = Map(
       "admitted" -> nAdmitted,

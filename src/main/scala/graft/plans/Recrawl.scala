@@ -99,9 +99,9 @@ object Recrawl {
       .persist()
     val n = targets.count()
     if (n > 0) {
-      commitMaintenance(spark, stateDir, cfg, version,
+      commitMaintenance(spark, stateDir, version,
         frontierNews = Some(targets),
-        seenDels = None, sidecarDels = None,
+        seenDels = None, sidecarDels = None, nSelected = n,
         counters = Map("refetch_scheduled" -> n))
     }
     targets.unpersist()
@@ -134,10 +134,10 @@ object Recrawl {
       .persist()
     val n = expired.count()
     if (n > 0) {
-      commitMaintenance(spark, stateDir, cfg, version,
+      commitMaintenance(spark, stateDir, version,
         frontierNews = None,
         seenDels = Some(expired.select("surt")),
-        sidecarDels = Some(expired.select("host_bucket", "url_hash")),
+        sidecarDels = Some(expired.select("host_bucket", "url_hash")), nSelected = n,
         counters = Map("expired" -> n))
     }
     expired.unpersist()
@@ -146,16 +146,17 @@ object Recrawl {
 
   /** Commit one maintenance version to all four tables (serial — this is a
     * rare administrative operation, not the per-round hot path). Idempotent
-    * per table, same as the round commits.
+    * per table, same as the round commits. `nSelected` is the counted row
+    * number of the news or dels, which sizes their write.
     */
   private def commitMaintenance(
       spark: SparkSession,
       stateDir: String,
-      cfg: CrawlConfig,
       version: Long,
       frontierNews: Option[DataFrame],
       seenDels: Option[DataFrame],
       sidecarDels: Option[DataFrame],
+      nSelected: Long,
       counters: Map[String, Long]): Unit = {
     val prevV = version - 1
 
@@ -166,8 +167,8 @@ object Recrawl {
     if (StateTable.alreadyCommitted(fDir, version).isEmpty) {
       val n = frontierNews match {
         case Some(news) =>
-          StateTable.writeSnap(news.coalesce(cfg.commitWriteParallelism), fDir, version,
-            partitioned = false)
+          StateTable.writeSnap(news, fDir, version, partitioned = false,
+            maxRows = Some(nSelected))
         case None => 0L
       }
       StateTable.finalizeCommit(fDir, version, version, n,
@@ -181,7 +182,7 @@ object Recrawl {
     if (StateTable.alreadyCommitted(sDir, version).isEmpty) {
       val nd = seenDels match {
         case Some(dels) =>
-          val n = StateTable.writeDels(dels.coalesce(cfg.commitWriteParallelism), sDir, version)
+          val n = StateTable.writeDels(dels, sDir, version, maxRows = Some(nSelected))
           sidecarDels.foreach(SeenStore.deleteFromSidecars(spark, sDir, prevV, version, _))
           n
         case None => 0L
@@ -195,11 +196,8 @@ object Recrawl {
     val hDir = CrawlRound.hostStateDir(stateDir)
     if (StateTable.alreadyCommitted(hDir, version).isEmpty) {
       val prev = StateTable.read(spark, hDir, Some(prevV), Some(graft.model.Schemas.hostState))
-      val data =
-        if (CrawlRound.chooseCoalescedCommit(StateTable.manifest(hDir, prevV).map(_.nRows)))
-          prev.coalesce(cfg.commitWriteParallelism)
-        else prev
-      val n = StateTable.writeSnap(data, hDir, version, partitioned = false)
+      val n = StateTable.writeSnap(prev, hDir, version, partitioned = false,
+        maxRows = StateTable.manifest(hDir, prevV).map(_.nRows))
       StateTable.finalizeCommit(hDir, version, version, n, counters)
     }
 

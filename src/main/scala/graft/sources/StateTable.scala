@@ -82,13 +82,26 @@ object StateTable {
     else roundScope(dir).flatMap { case (sd, tbl) => RoundLog.tableManifest(sd, tbl, v) }
   }
 
-  private def hasDataFiles(path: String): Boolean = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) return false
-    val stream = Files.walk(p)
-    try stream.iterator.asScala.exists(_.getFileName.toString.endsWith(".parquet"))
+  /** The data files of a snapshot dir by Spark's rule: no path component
+    * starting with `_` or `.` — not `_temporary` (an unfinished task's
+    * output), `.crc` checksums or a `_SUCCESS` marker. Listed through
+    * `java.nio`: Hadoop's local filesystem starts a process per listed entry
+    * when it has no native library.
+    */
+  private def dataFiles(path: String): Seq[Path] = {
+    val root = Paths.get(path)
+    if (!Files.isDirectory(root)) return Seq.empty
+    val stream = Files.walk(root)
+    try stream.iterator.asScala.filter { f =>
+      Files.isRegularFile(f) && root.relativize(f).iterator.asScala.forall { c =>
+        val n = c.toString
+        !n.startsWith("_") && !n.startsWith(".")
+      }
+    }.toVector
     finally stream.close()
   }
+
+  private def hasDataFiles(path: String): Boolean = dataFiles(path).nonEmpty
 
   private def isPartitionedLayout(path: String): Boolean = {
     val p = Paths.get(path)
@@ -124,24 +137,16 @@ object StateTable {
     }
   }
 
-  /** Row count from parquet footers — driver-side, no Spark job. */
-  private def footerRowCount(path: String): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return 0L
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) files += f
-    }
+  /** Row count from parquet footers — driver-side, no Spark job, no Hadoop
+    * filesystem (footers open through parquet's `LocalInputFile`).
+    */
+  private[graft] def footerRowCount(path: String): Long = {
     // footer reads in parallel — 64-bucket snapshots would otherwise cost
     // ~10ms × files of serial driver time per commit
     import scala.collection.parallel.CollectionConverters._
-    files.par.map { f =>
+    dataFiles(path).par.map { f =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        new org.apache.parquet.io.LocalInputFile(f))
       try reader.getRecordCount
       finally reader.close()
     }.sum
@@ -184,15 +189,31 @@ object StateTable {
 
   /** Stage-1b of a MERGE-ON-READ delta commit: write version `v`'s tombstone
     * keys (between [[writeSnap]] and [[finalizeCommit]], like bloom sidecars,
-    * so a committed version always has its dels present). Returns the row
-    * count, which the caller must record as the [[DelsCounter]] counter —
-    * readers size the anti-join arm from manifests alone.
+    * so a committed version always has its dels present), at the width
+    * [[writeSnap]]'s `maxRows` rule gives. Returns the row count, which the
+    * caller must record as the [[DelsCounter]] counter — readers size the
+    * anti-join arm from manifests alone.
     */
-  def writeDels(delKeys: DataFrame, dir: String, version: Long): Long = {
+  def writeDels(
+      delKeys: DataFrame, dir: String, version: Long, maxRows: Option[Long] = None): Long = {
     val path = delPath(dir, version)
-    delKeys.write.mode("overwrite").parquet(path)
+    dataWriter(sized(delKeys, maxRows)).parquet(path)
     footerRowCount(path)
   }
+
+  /** `df` coalesced to [[graft.operators.Parallelism.partsFor]] its row
+    * bound — one file per ~1M rows, so a small delta is one file however
+    * wide the session is; no bound keeps the upstream width (the fail-safe
+    * direction: an unknown-size delta is never funnelled into few tasks).
+    */
+  private def sized(df: DataFrame, maxRows: Option[Long]): DataFrame =
+    maxRows.fold(df)(n => df.coalesce(graft.operators.Parallelism.partsFor(df, n)))
+
+  /** Overwrite writer with no `_SUCCESS` marker: the manifest is the commit
+    * point, and no reader looks for the marker.
+    */
+  private def dataWriter(df: DataFrame) = df.write.mode("overwrite")
+    .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
   /** The versions a merge-on-read at `v` unions: the NEWEST full snapshot ≤
     * v (any version committed without the [[DelsCounter]] — a seed commit, a
@@ -405,18 +426,23 @@ object StateTable {
     * [[finalizeCommit]] publishes the manifest + CURRENT, so side artifacts
     * derived from the data (e.g. bloom sidecars) can be written in between —
     * a reader never sees a committed version whose sidecars are missing.
+    * `maxRows` is the caller's bound on the rows of `df`; a flat write
+    * coalesces to the width it implies (see [[sized]]).
     */
-  def writeSnap(df: DataFrame, dir: String, version: Long, partitioned: Boolean = true): Long = {
+  def writeSnap(
+      df: DataFrame,
+      dir: String,
+      version: Long,
+      partitioned: Boolean = true,
+      maxRows: Option[Long] = None): Long = {
     val path = snapPath(dir, version)
     // one writer task per bucket directory: without the repartition each of
     // the N shuffle partitions opens a file in every bucket dir (N×B tiny
     // files per snapshot — the classic partitionBy write amplification)
-    val writer =
-      if (partitioned && df.columns.contains("host_bucket"))
-        df.repartition(org.apache.spark.sql.functions.col("host_bucket"))
-          .write.partitionBy("host_bucket")
-      else df.write // flat deltas keep upstream parallelism (writes scale)
-    writer.mode("overwrite").parquet(path)
+    if (partitioned && df.columns.contains("host_bucket"))
+      dataWriter(df.repartition(org.apache.spark.sql.functions.col("host_bucket")))
+        .partitionBy("host_bucket").parquet(path)
+    else dataWriter(sized(df, maxRows)).parquet(path)
     // driver-side footer count — no Spark job
     footerRowCount(path)
   }

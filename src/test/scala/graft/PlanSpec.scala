@@ -336,14 +336,104 @@ class PlanSpec extends AnyFunSuite with SparkTestSession {
     assert(!chooseBroadcastHostState(Some(hostStateBroadcastMaxRows + 1)))
   }
 
-  test("commit-coalesce gate: unknown or big host_state keeps full write width") {
-    import graft.plans.CrawlRound.{chooseCoalescedCommit, smallCommitMaxRows}
-    // fail-safe direction is FULL WIDTH: an unknown-size table must keep its
-    // parallel write (coalescing a huge table to 8 tasks would bottleneck)
-    assert(!chooseCoalescedCommit(None))
-    assert(chooseCoalescedCommit(Some(0L)))
-    assert(chooseCoalescedCommit(Some(smallCommitMaxRows)))
-    assert(!chooseCoalescedCommit(Some(smallCommitMaxRows + 1)))
+  test("S4 delta commit width: one file per steady delta, upstream width without a bound") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import graft.plans.{Crawler, CrawlRound, Recrawl}
+    import graft.sources.{RoundLog, StateTable, SyntheticWeb}
+    import spark.implicits._
+    val web = SyntheticWeb.WebConfig(seed = 42L, nPages = 1000, nHosts = 40)
+    val cfg = graft.model.CrawlConfig(buckets = 16, roundBudget = 100, maxDepth = 10)
+    val pages = SyntheticWeb.pages(spark, web).toDF().cache()
+    val robots = SyntheticWeb.robotsTable(spark, web)
+    val seeds = SyntheticWeb.seeds(web, 10)
+    def dataFiles(p: String): Int =
+      if (!Files.isDirectory(Paths.get(p))) 0
+      else {
+        val w = Files.list(Paths.get(p))
+        try w.iterator.asScala.count(_.getFileName.toString.endsWith(".parquet")) finally w.close()
+      }
+    // the delta writes of a steady round; `fromNewUrls` marks the two whose
+    // row bound is the previous round's new_urls counter
+    val deltas: Seq[(String, String => String, Boolean)] = Seq(
+      ("fetch_log/snap", d => StateTable.snapPath(CrawlRound.fetchLogDir(d), 3L), false),
+      ("frontier/snap", d => StateTable.snapPath(CrawlRound.frontierDir(d), 3L), true),
+      ("frontier/dels", d => StateTable.delPath(CrawlRound.frontierDir(d), 3L), false),
+      ("url_seen/snap", d => StateTable.snapPath(CrawlRound.seenDir(d), 3L), true),
+      ("host_state/snap", d => StateTable.snapPath(CrawlRound.hostStateDir(d), 3L), false))
+    def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).sorted.toSeq
+    def rowsAt(d: String, v: Long): Seq[Seq[String]] = Seq(
+      StateTable.readAppended(spark, CrawlRound.fetchLogDir(d), Some(v)),
+      CrawlRound.readFrontier(spark, d, Some(v)),
+      spark.read.parquet(StateTable.delPath(CrawlRound.frontierDir(d), v)),
+      StateTable.readAppended(spark, CrawlRound.seenDir(d), Some(v)),
+      StateTable.read(spark, CrawlRound.hostStateDir(d), Some(v))
+    ).map(rowsOf)
+
+    // the stages that materialize the fetch root's cache, by the cached RDD
+    // (named after its plan, which holds the page-scan kernel) at their head
+    val scanStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.headOption.exists(_.name.contains("page_scan_hrefs_hash")))
+          scanStageTasks.add(e.stageInfo.numTasks)
+    }
+    // no post-shuffle coalescing, so an unbounded delta shows its upstream width
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.get(coalesceKey)
+    spark.conf.set(coalesceKey, "false")
+    try {
+      val dRef = tmpDir("width-ref")
+      Crawler.crawl(spark, dRef, pages, robots, seeds, cfg, 2)
+      spark.sparkContext.addSparkListener(listener)
+      try Crawler.crawl(spark, dRef, pages, robots, seeds, cfg, 3)
+      finally {
+        drainListenerBus()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      deltas.foreach { case (name, path, _) =>
+        assert(dataFiles(path(dRef)) == 1, s"$name: ${dataFiles(path(dRef))} files")
+      }
+      val scans = scanStageTasks.asScala.toSeq
+      assert(scans.nonEmpty && scans.forall(_ == spark.sparkContext.defaultParallelism),
+        s"fetch-root page-scan stages ran $scans tasks")
+
+      // the same round with round 2's new_urls counter gone: the seen and
+      // frontier news lose their bound and keep the upstream width
+      val dNo = tmpDir("width-nocounter")
+      Crawler.crawl(spark, dNo, pages, robots, seeds, cfg, 2)
+      val m2 = Paths.get(dNo, "_round_log", "2.json")
+      Files.writeString(m2, Files.readString(m2).replaceAll(",?\"new_urls\":\\d+", ""))
+      RoundLog.clearCache()
+      assert(StateTable.manifest(CrawlRound.seenDir(dNo), 2L).exists(!_.counters.contains("new_urls")))
+      Crawler.crawl(spark, dNo, pages, robots, seeds, cfg, 3)
+      deltas.foreach { case (name, path, fromNewUrls) =>
+        val files = dataFiles(path(dNo))
+        assert(if (fromNewUrls) files > 1 else files == 1, s"$name without a bound: $files files")
+      }
+      (1L to 3L).foreach(v => assert(rowsAt(dNo, v) == rowsAt(dRef, v), s"rows differ at v$v"))
+      assert(RoundLog.manifest(dNo, 3L).map(_.tables) == RoundLog.manifest(dRef, 3L).map(_.tables))
+
+      // maintenance commits: bounded by their counted selection
+      val fetched = StateTable.readAppended(spark, CrawlRound.fetchLogDir(dRef))
+        .select("surt").as[String].collect().sorted.toSeq
+      val nRefetch = Recrawl.scheduleRefetch(spark, dRef, cfg, fetched.take(30).toDF("surt"))
+      val fSnap4 = StateTable.snapPath(CrawlRound.frontierDir(dRef), 4L)
+      assert(nRefetch > 0 && dataFiles(fSnap4) == 1)
+      assert(StateTable.manifest(CrawlRound.frontierDir(dRef), 4L).exists(_.nRows == nRefetch))
+      assert(spark.read.parquet(fSnap4).select("surt").distinct().count() == nRefetch)
+      assert(dataFiles(StateTable.snapPath(CrawlRound.hostStateDir(dRef), 4L)) == 1)
+      assert(rowsOf(StateTable.read(spark, CrawlRound.hostStateDir(dRef), Some(4L))) ==
+        rowsOf(StateTable.read(spark, CrawlRound.hostStateDir(dRef), Some(3L))))
+      val nExpired = Recrawl.expireSeen(spark, dRef, cfg, fetched.slice(30, 60).toDF("surt"))
+      val sDels5 = StateTable.delPath(CrawlRound.seenDir(dRef), 5L)
+      assert(nExpired > 0 && dataFiles(sDels5) == 1)
+      assert(spark.read.parquet(sDels5).count() == nExpired)
+    } finally {
+      spark.conf.set(coalesceKey, before)
+      pages.unpersist()
+    }
   }
 
   test("IVF probe: partition-pruned scan, brute-force agreement within LSH recall") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.CrawlConfig
@@ -72,11 +74,18 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
   private lazy val robots = SyntheticWeb.robotsTable(spark, web)
   private lazy val seeds = SyntheticWeb.seeds(web, 8)
 
-  private def frontierOf(dir: String) =
-    Crawler.orderedFrontier(spark, dir).select("surt", "depth", "score").collect().toSeq
-  private def seenOf(dir: String) =
-    StateTable.readAppended(spark, CrawlRound.seenDir(dir))
+  private def frontierOf(dir: String, v: Option[Long] = None) =
+    Crawler.orderedFrontier(spark, dir, v).select("surt", "depth", "score").collect().toSeq
+  private def seenOf(dir: String, v: Option[Long] = None) =
+    StateTable.readAppended(spark, CrawlRound.seenDir(dir), v)
       .select("surt").collect().map(_.getString(0)).toSet
+
+  private def rmTree(p: java.nio.file.Path): Unit = {
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .iterator.asScala.foreach(Files.deleteIfExists(_))
+    finally s.close()
+  }
 
   private def filtersOf(dir: String, v: Long) =
     graft.operators.SeenStore.readAll(CrawlRound.seenDir(dir), v).map { case (b, f) => b -> f.toSeq }
@@ -109,12 +118,7 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     }
     // remove the round log entirely — the dir is now pure r4 layout (and
     // model the fresh driver that opens it: no cached round manifests)
-    val rl = Paths.get(dir, "_round_log")
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(rl)
-    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator.asScala.foreach(Files.deleteIfExists(_))
-    finally s.close()
+    rmTree(Paths.get(dir, "_round_log"))
     RoundLog.clearCache()
   }
 
@@ -174,6 +178,43 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("kill inside the concurrent delta writes: resume ≡ uninterrupted at every version") {
+    val dRef = tmpDir("roundlog-midwrite-ref")
+    val cRef = Crawler.crawl(spark, dRef, pages, robots, seeds, cfg, 5)
+    val dir = tmpDir("roundlog-midwrite")
+    Crawler.crawl(spark, dir, pages, robots, seeds, cfg, 4)
+    // the kill lands while round 4's four data writes run: fetch_log and
+    // url_seen (with its sidecars) have written v4, frontier and host_state
+    // have not, one of host_state's task attempts left an unfinished part
+    // file under snap-4/_temporary, and nothing was published
+    Files.delete(Paths.get(dir, "_round_log", "4.json"))
+    Files.writeString(Paths.get(dir, "_round_log", "CURRENT"), "3")
+    val fDir = CrawlRound.frontierDir(dir)
+    val hDir = CrawlRound.hostStateDir(dir)
+    Seq(StateTable.snapPath(fDir, 4L), StateTable.delPath(fDir, 4L), StateTable.snapPath(hDir, 4L))
+      .foreach(p => rmTree(Paths.get(p)))
+    assert(Files.exists(Paths.get(StateTable.snapPath(CrawlRound.fetchLogDir(dir), 4L))))
+    assert(Files.exists(Paths.get(StateTable.snapPath(CrawlRound.seenDir(dir), 4L))))
+    val attempt = Paths.get(StateTable.snapPath(hDir, 4L), "_temporary", "0", "_temporary", "attempt_0")
+    Files.createDirectories(attempt)
+    val part3 = { val s = Files.list(Paths.get(StateTable.snapPath(hDir, 3L)))
+      try s.iterator.asScala.find(_.getFileName.toString.endsWith(".parquet")).get finally s.close() }
+    Files.copy(part3, attempt.resolve("part-00000.parquet"))
+    RoundLog.clearCache()
+    assert(Resume.lastCompleteVersion(dir).contains(3L), "partial round visible")
+    val resumed = Crawler.crawl(spark, dir, pages, robots, seeds, cfg, 5)
+    assert(resumed == cRef.drop(3), "resumed rounds' counters differ")
+    (1L to 5L).foreach { v =>
+      assert(RoundLog.manifest(dir, v).map(_.tables) == RoundLog.manifest(dRef, v).map(_.tables),
+        s"manifests differ at v$v")
+    }
+    (0L to 5L).foreach { v =>
+      assert(frontierOf(dir, Some(v)) == frontierOf(dRef, Some(v)), s"frontier differs at v$v")
+      assert(seenOf(dir, Some(v)) == seenOf(dRef, Some(v)), s"seen differs at v$v")
+      assert(filtersOf(dir, v) == filtersOf(dRef, v), s"resolved filters differ at v$v")
+    }
+  }
+
   test("migration: r4-era per-table state dir resumes under round-log commits") {
     val dRef = tmpDir("roundlog-mig-ref")
     Crawler.crawl(spark, dRef, pages, robots, seeds, cfg, 6)
@@ -228,7 +269,6 @@ class RoundLogSpec extends AnyFunSuite with SparkTestSession {
     // no ghost round files: every remaining round manifest still carries at
     // least one live table, and none below ALL cutoffs survives
     val rl = Paths.get(dir, "_round_log")
-    import scala.jdk.CollectionConverters._
     val files = { val s = Files.list(rl); try s.iterator.asScala
       .map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq finally s.close() }
     val allTables = Seq("frontier", "url_seen", "host_state", "fetch_log")

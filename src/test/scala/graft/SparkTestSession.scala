@@ -20,39 +20,54 @@ trait SparkTestSession {
   lazy val spark: SparkSession = SparkTestSession.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-  /** Jobs `body` starts, counted by a listener on the job group. A one-task
-    * marker job closes the count: the bus delivers events in order, so once
-    * the marker has ended every job `body` started has been seen.
-    */
+  /** Jobs `body` starts, counted by a listener on the job group. */
   def jobsStartedBy[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
     val group = "graft-job-count"
     val started = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group &&
+            p.getProperty("graft.marker") == null) started.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = body
+      drainListenerBus()
+      (out, started.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Returns once every listener event posted before the call has been
+    * delivered: a one-task marker job closes the window, and the bus
+    * delivers events in order.
+    */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
     val markerDone = new CountDownLatch(1)
     val listener = new SparkListener {
       @volatile private var markerId = -1
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val p = j.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
-          if (p.getProperty("graft.marker") != null) markerId = j.jobId
-          else started.incrementAndGet()
-        }
+        if (p != null && p.getProperty("graft.marker") != null) markerId = j.jobId
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         if (j.jobId == markerId) markerDone.countDown()
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, group)
-      val out = body
       sc.setLocalProperty("graft.marker", "1")
       sc.parallelize(Seq(1), 1).count()
       if (!markerDone.await(60, TimeUnit.SECONDS))
         throw new AssertionError("marker job end never arrived")
-      (out, started.get)
     } finally {
       sc.setLocalProperty("graft.marker", null)
-      sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.CrawlRound
@@ -286,5 +286,43 @@ class StateTableSpec extends AnyFunSuite with SparkTestSession {
     StateTable.commit(empty, dir, 0L, 0L)
     val back = StateTable.read(spark, dir, None, Some(graft.model.Schemas.hostState))
     assert(back.count() == 0 && back.columns.length == 5)
+  }
+
+  test("footer counts follow Spark's data-file rule; writes leave no _SUCCESS") {
+    import scala.jdk.CollectionConverters._
+    def names(p: String): Seq[String] = {
+      val w = Files.walk(Paths.get(p))
+      try w.iterator.asScala.map(_.getFileName.toString).toVector finally w.close()
+    }
+    val dir = tmpDir("st-files")
+    val rows = (1 to 40).map(i => (s"s$i", i))
+    val n = StateTable.writeSnap(rows.toDF("surt", "x").repartition(3), dir, 1L,
+      partitioned = false)
+    val nd = StateTable.writeDels(Seq("s1", "s2").toDF("surt").repartition(2), dir, 1L)
+    assert(n == 40L && nd == 2L)
+    Seq(StateTable.snapPath(dir, 1L), StateTable.delPath(dir, 1L)).foreach { p =>
+      assert(!names(p).exists(_.contains("_SUCCESS")), s"_SUCCESS marker in $p")
+    }
+    // what a killed task, the checksummed local filesystem and an older
+    // writer leave beside the data: an unfinished attempt's part file, a
+    // .crc file and a _SUCCESS marker, each a copy of a data file's bytes
+    val snap = Paths.get(StateTable.snapPath(dir, 1L))
+    val part = names(snap.toString).find(_.endsWith(".parquet")).get
+    val tmp = snap.resolve("_temporary/0/_temporary/attempt_0")
+    Files.createDirectories(tmp)
+    Files.copy(snap.resolve(part), tmp.resolve("part-x.parquet"))
+    Files.copy(snap.resolve(part), snap.resolve(".part-x.parquet.crc"))
+    Files.copy(snap.resolve(part), snap.resolve("_SUCCESS"))
+    assert(StateTable.footerRowCount(snap.toString) == 40L)
+    // Spark's reader skips the same names: the count is the read's rows
+    assert(spark.read.parquet(snap.toString).count() == 40L)
+    // a dir holding only an unfinished attempt has no data
+    val orphan = Paths.get(StateTable.snapPath(dir, 2L), "_temporary", "0")
+    Files.createDirectories(orphan)
+    Files.copy(snap.resolve(part), orphan.resolve("part-y.parquet"))
+    assert(StateTable.footerRowCount(StateTable.snapPath(dir, 2L)) == 0L)
+    StateTable.finalizeCommit(dir, 2L, 2L, 0L)
+    val schema = StructType(Seq(StructField("surt", StringType), StructField("x", IntegerType)))
+    assert(StateTable.read(spark, dir, Some(2L), Some(schema)).count() == 0L)
   }
 }

@@ -19,10 +19,8 @@ import java.nio.file.{Files, Paths}
   *    breakdown can describe a warm pass like the benchmark's timed ones.
   *  - `dataflow [pct]` — one frontier-expansion rep on the bench corpus with
   *    every physical operator's metrics (needs SPARK_GRAFT_BENCH_CORPUS).
-  *  - `dfab [pct]` — ablation ladder over that rep, one layer per rung.
   *  - `cluster [pairs]` — the dataflow rep on 1 vs 4 local-cluster executor
   *    JVMs (needs the full Spark dist: SPARK_HOME, SPARK_SCALA_VERSION).
-  *  - `kernel [n]` — per-row scan and resolve+canon costs, no Spark.
   */
 object BenchExtra {
 
@@ -139,54 +137,6 @@ object BenchExtra {
         dump(df.queryExecution.executedPlan, 0)
         spark.stop()
 
-      case "dfab" =>
-        // ablation ladder over the dataflow plan: each rung strips one layer
-        // so the diffs attribute the rep's cost (guide §1.1 empirical loop)
-        val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
-        val pct = if (args.length > 1) args(1).toInt else 100
-        val spark = Bench.session(cpus)
-        import org.apache.spark.sql.functions._
-        val web = graft.sources.SyntheticWeb.WebConfig(
-          seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        val pages = Bench.bucketedPages(spark, corpus)
-        val cfg = graft.model.CrawlConfig()
-        val robotsBc = graft.operators.Robots.broadcastPolicies(
-          spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-        val allowPathUdf = udf((host: String, path: String) =>
-          robotsBc.value.get(host).forall(_.allows(path)))
-        def frontier = Bench.seedFrontier(pages, pct, cfg)
-        def admitted = frontier.select("surt", "url", "host", "host_bucket", "depth", "score")
-        def joined = pages.select(col("url"), col("html"))
-          .join(admitted.hint("merge"), Seq("url"), "inner")
-          .where(col("html").isNotNull)
-        def exploded = joined
-          .select(
-            col("surt").as("parent_surt"), col("url").as("base_url"),
-            col("depth").as("parent_depth"), col("score"),
-            graft.functions.CanonExpressions.pageScanHrefsCol(col("html")).as("scan"))
-          .select(col("parent_surt"), col("base_url"), col("parent_depth"),
-            (col("score") / greatest(size(col("scan.links")), lit(1))).as("contrib"),
-            explode(col("scan.links")).as("link"))
-        def resolved = exploded
-          .withColumn("cp", graft.functions.CanonExpressions.resolveCanonCol(col("base_url"), col("link")))
-          .where(col("cp").isNotNull && col("cp.url").startsWith("http") &&
-            allowPathUdf(col("cp.host"), col("cp.path")))
-        val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-          ("scan+join only (html bytes)", () => joined.select(length(col("html")).as("n")).groupBy().sum("n")),
-          ("…+scanUDF+explode", () => exploded.select(col("link")).groupBy().count()),
-          ("…+resolve+robots", () => resolved.select(col("cp.surt")).groupBy().count()),
-          ("…+agg by surt (full rep)", () => graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg)))
-        variants.foreach { case (label, mk) =>
-          mk().queryExecution.toRdd.foreach(_ => ()) // warm
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            mk().queryExecution.toRdd.foreach(_ => ())
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$label%-28s min ${times.min}%6.2f s  ${times.map(t => f"$t%.2f").mkString("[", " ", "]")}")
-        }
-        spark.stop()
-
       case "cluster" =>
         // r5 VERDICT "Next round" #2: run the scaling protocol on SEPARATE
         // EXECUTOR JVMs via Spark's local-cluster master — N vs 4N executor
@@ -234,49 +184,8 @@ object BenchExtra {
         val bestHi = samples.map(_._2).max
         println(f"[cluster] per-width max: 1x8=${bestLo}%.0f 4x8=${bestHi}%.0f URLs/s, efficiency ${(bestHi / bestLo) / 4}%.4f")
 
-      case "kernel" =>
-        // pure per-row kernel costs (no Spark): the crawl/dataflow hot path is
-        // parquet-decode → scanPageHrefs → resolveCanon per link. Times here
-        // bound what per-task-work optimization (guide §1.2 step 2) can buy.
-        val n = if (args.length > 1) args(1).toInt else 20000
-        val cfg = graft.sources.SyntheticWeb.WebConfig(
-          seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        val htmls = (0 until n).map(i =>
-          graft.sources.SyntheticWeb.renderHtml(cfg, i.toLong)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-        val bases = (0 until n).map(i => graft.sources.SyntheticWeb.pageUrl(cfg, i.toLong)).toArray
-        def bench(label: String)(body: => Long): Unit = {
-          body // warm-up (JIT)
-          val t0 = System.nanoTime(); val sink = body
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"$label%-22s ${dt}%7.3f s  (${dt * 1e9 / n}%8.0f ns/page, sink=$sink)")
-        }
-        var nLinks = 0L
-        bench("scanPageHrefs") {
-          var acc = 0L; var i = 0
-          while (i < n) {
-            val ps = graft.functions.Html.scanPageHrefs(htmls(i))
-            acc += ps.hrefs.length + ps.textXxh64; nLinks += ps.hrefs.length; i += 1
-          }
-          acc
-        }
-        val links = (0 until n).flatMap { i =>
-          graft.functions.Html.scanPageHrefs(htmls(i)).hrefs.map(h => (bases(i), h))
-        }.toArray
-        println(s"links: ${links.length} (${links.length.toDouble / n} per page)")
-        bench("resolve+canonParts") {
-          var acc = 0L; var i = 0
-          while (i < links.length) {
-            val cp = graft.functions.UrlCanon.canonParts(
-              graft.functions.UrlCanon.resolve(links(i)._1, links(i)._2))
-            if (cp != null) acc += cp.surt.length
-            i += 1
-          }
-          acc
-        }
-
       case other =>
-        System.err.println(s"unknown mode '$other' (explain|time|noop|stages|dataflow|dfab|cluster|kernel)")
+        System.err.println(s"unknown mode '$other' (explain|time|noop|stages|dataflow|cluster)")
         sys.exit(2)
     }
   }

@@ -150,17 +150,18 @@ object Plans {
         "candidate set from the stage above.",
       fmt(SparkEntry.queries("q_match_fuzzy")(spark, sf)))
 
-    // 9. the injected optimizer rule: UDF composition → fused native kernel
+    // 9. the injected SQL functions: canon ∘ resolve → fused native kernel
     {
       spark.read.parquet(s"$sf/documents.parquet")
         .select(concat(lit("http://h"), col("doc_id"), lit(".example/a/b")).as("base"),
           lit("../c?x=1&utm_source=t").as("href"))
         .createOrReplaceTempView("plans_links")
       section("U9: canon_url(resolve_link(..)) fuses into one native kernel",
-        "`NativeUrlRewrite` (injected via `spark.sql.extensions`) rewrites " +
-          "the registered ScalaUDF composition into a single " +
-          "`resolve_canon_surt` codegen expression — no closure dispatch, " +
-          "no intermediate resolved-URL string, inside WholeStageCodegen.",
+        "`canon_url` and `resolve_link` (injected via `spark.sql.extensions`) " +
+          "build native codegen expressions, and `canon_url` over " +
+          "`resolve_link` builds a single `resolve_canon_surt` call at " +
+          "analysis — no closure dispatch, no intermediate resolved-URL " +
+          "string, inside WholeStageCodegen.",
         fmt(spark.sql(
           "SELECT canon_url(resolve_link(base, href)) AS u FROM plans_links")))
     }

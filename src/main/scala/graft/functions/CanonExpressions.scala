@@ -2,30 +2,31 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, GetStructField, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the canonicalization hot path (SURVEY.md
-  * §4.3 / M12): resolve+canon+SURT and the crawl's page scan as expressions
-  * with `doGenCode`, so the candidate pipeline stays inside one whole-stage
-  * codegen span with a direct static call per row — no ScalaUDF closure
-  * dispatch, no CatalystTypeConverter boxing of the struct/array results
-  * (the kernels build `InternalRow`/`GenericArrayData` directly).
+/** Native Catalyst expressions for the URL kernels and the crawl's page scan
+  * (SURVEY.md §4.3 / M12, U2/U9): resolve, canon and SURT as expressions with
+  * `doGenCode`, so a pipeline stays inside one whole-stage codegen span with
+  * a direct static call per row — no ScalaUDF closure dispatch, no
+  * CatalystTypeConverter boxing of the struct/array results (the kernels
+  * build `InternalRow`/`GenericArrayData` directly).
   *
-  * Semantics are EXACTLY the UDFs' (same UrlCanon/Html kernels underneath);
-  * golden-vector equality is pinned by UrlCanonSpec/HtmlSpec tests.
+  * The SQL names `canon_url`, `surt` and `resolve_link` and the Column-API
+  * functions in [[UrlFunctions]] are bound to these nodes by the builders in
+  * [[CanonExpressions]]; the kernels are UrlCanon/Html, whose golden vectors
+  * UrlCanonSpec/HtmlSpec pin.
   */
 object CanonKernel {
 
-  /** Mirrors resolveCanonUdf EXACTLY, including nulls: the kernel is total
-    * over null inputs because `UrlCanon.resolve(null, absoluteHref)` is a
-    * defined case (the RFC short-circuit uses the href's own scheme without
-    * touching the base), so a null-safe wrapper would NOT be equivalent to
-    * the UDF composition `canonParts(resolve(b, h))`.
+  /** `canonParts(resolve(b, h))` on every input, nulls included: the kernel
+    * is total over null inputs because `UrlCanon.resolve(null, absoluteHref)`
+    * is a defined case (the RFC short-circuit uses the href's own scheme
+    * without touching the base), so a null-safe wrapper would differ.
     */
   def resolveCanon(base: UTF8String, href: UTF8String): InternalRow = {
     val cp = UrlCanon.canonParts(UrlCanon.resolve(
@@ -35,6 +36,14 @@ object CanonKernel {
     else new GenericInternalRow(Array[Any](
       UTF8String.fromString(cp.url), UTF8String.fromString(cp.host),
       UTF8String.fromString(cp.path), UTF8String.fromString(cp.surt)))
+  }
+
+  /** Total over nulls for the same reason as [[resolveCanon]]. */
+  def resolve(base: UTF8String, href: UTF8String): UTF8String = {
+    val r = UrlCanon.resolve(
+      if (base == null) null else base.toString,
+      if (href == null) null else href.toString)
+    if (r == null) null else UTF8String.fromString(r)
   }
 
   def canon(raw: UTF8String): UTF8String = {
@@ -72,20 +81,21 @@ object CanonKernel {
     StructField("text_xxh64", LongType)))
 }
 
-/** resolve(base, href) → canonicalize → (url, host, path, surt) struct.
+/** resolve(base, href) → canonicalize → (url, host, path, surt) struct;
+  * `canon_url(resolve_link(b, h))` and `surt(resolve_link(b, h))` build
+  * fields of this node (see [[CanonExpressions.canon]]).
   *
   * NOT null-safe-wrapped: a null base with an absolute href is a DEFINED
-  * input of the underlying UDF composition (RFC 3986 §5.2.1's short-circuit
-  * never reads the base), so eval/codegen pass possibly-null children into
-  * the total kernel instead of short-circuiting — keeping the expression
-  * exactly equal to `resolveCanonUdf`, which [[NativeUrlRewrite]] rewrites
-  * into this node.
+  * input (RFC 3986 §5.2.1's short-circuit never reads the base), so
+  * eval/codegen pass possibly-null children into the total kernel instead of
+  * short-circuiting, exactly as [[ResolveLink]] does.
   */
 case class ResolveCanonSurt(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  // fail at ANALYSIS on a mistyped column, not with a mid-job executor
-  // ClassCastException after real work is done (same fast-fail discipline
-  // as ExtractLinksGen.checkInputDataTypes)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  // atomic inputs are cast to STRING as a ScalaUDF's were; anything else
+  // fails at ANALYSIS, not with a mid-job executor ClassCastException after
+  // real work is done (same fast-fail discipline as
+  // ExtractLinksGen.checkInputDataTypes)
   override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def dataType: DataType = CanonKernel.canonPartsType
   override def nullable: Boolean = true
@@ -112,12 +122,44 @@ case class ResolveCanonSurt(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `resolve_link(base, href)`: RFC 3986 §5 resolution (null if either side
+  * is malformed). Not null-safe-wrapped, for the reason given on
+  * [[ResolveCanonSurt]]: a null base with an absolute href resolves.
+  */
+case class ResolveLink(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override def prettyName: String = "resolve_link"
+  override def eval(input: InternalRow): Any =
+    CanonKernel.resolve(
+      left.eval(input).asInstanceOf[UTF8String],
+      right.eval(input).asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bEv = left.genCode(ctx)
+    val hEv = right.genCode(ctx)
+    ev.copy(code =
+      code"""
+        ${bEv.code}
+        ${hEv.code}
+        UTF8String ${ev.value} = graft.functions.CanonKernel.resolve(
+          ${bEv.isNull} ? null : ${bEv.value},
+          ${hEv.isNull} ? null : ${hEv.value});
+        boolean ${ev.isNull} = ${ev.value} == null;
+      """)
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** RFC 3986 canonical form of a raw URL (null if unparseable). */
-case class CanonUrl(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+case class CanonUrl(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def prettyName: String = "canon_url_expr"
+  override def prettyName: String = "canon_url"
   override protected def nullSafeEval(raw: Any): Any =
     CanonKernel.canon(raw.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -131,11 +173,11 @@ case class CanonUrl(child: Expression) extends UnaryExpression with ExpectsInput
 }
 
 /** SURT form of a raw URL (null if unparseable). */
-case class SurtOf(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+case class SurtOf(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def prettyName: String = "surt_expr"
+  override def prettyName: String = "surt"
   override protected def nullSafeEval(raw: Any): Any =
     CanonKernel.surt(raw.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -151,7 +193,7 @@ case class SurtOf(child: Expression) extends UnaryExpression with ExpectsInputTy
 /** Fused page scan, crawl hot path (round 6): hrefs array + xxhash64(text),
   * no anchor extraction — anchors are never consumed on the crawl/candidate
   * path, and their per-link sub-scan + entity decode + String cost ~30-40%
-  * of the scan kernel (BenchExtra `kernel`; hrefs ≡ links.href pinned in
+  * of the scan kernel (round-6 kernel timing; hrefs ≡ links.href pinned in
   * CanonExprSpec).
   */
 case class PageScanHrefsHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
@@ -185,7 +227,7 @@ case class PageScanHrefsHash(child: Expression) extends UnaryExpression with Exp
   * intermediate (href struct row from explode, then a 4-field `cp` struct
   * copied through two more projections) never materializes — the row the
   * generator yields IS the final shape. Dropped-null semantics are exactly
-  * the old `cp.isNotNull` filter (pinned ≡ UDF+explode in CanonExprSpec).
+  * the old `cp.isNotNull` filter (pinned ≡ explode + UrlCanon in CanonExprSpec).
   */
 case class ResolveLinksGen(left: Expression, right: Expression)
     extends BinaryExpression
@@ -233,13 +275,32 @@ case class ResolveLinksGen(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column factories for the native expressions. */
+/** The one binding of each URL kernel name to its native node: the SQL
+  * functions (injected by [[GraftExtensions]]) and the Column API
+  * ([[UrlFunctions]]) both build through `canon`, `surt` and the [[ResolveLink]] constructor.
+  *
+  * `canon`/`surt` of a [[ResolveLink]] fuse into one [[ResolveCanonSurt]]
+  * call (resolve + canonicalize in a single pass, no intermediate
+  * resolved-URL string): `canonParts(raw).url == canonicalize(raw)` and
+  * `.surt == surt(raw)` by construction, and both nodes pass nulls through
+  * the same total kernels, so the fusion is exact on every input. Spark's
+  * analyzer resolves a function's arguments before calling its builder, so
+  * the SQL form `canon_url(resolve_link(b, h))` fuses here too.
+  */
 object CanonExpressions {
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+  def canon(raw: Expression): Expression = raw match {
+    case ResolveLink(b, h) => GetStructField(ResolveCanonSurt(b, h), 0, Some("url"))
+    case _ => CanonUrl(raw)
+  }
+  def surt(raw: Expression): Expression = raw match {
+    case ResolveLink(b, h) => GetStructField(ResolveCanonSurt(b, h), 3, Some("surt"))
+    case _ => SurtOf(raw)
+  }
+
   def resolveCanonCol(base: Column, href: Column): Column =
     column(ResolveCanonSurt(expression(base), expression(href)))
-  def canonCol(raw: Column): Column = column(CanonUrl(expression(raw)))
-  def surtCol(raw: Column): Column = column(SurtOf(expression(raw)))
   def pageScanHrefsCol(html: Column): Column = column(PageScanHrefsHash(expression(html)))
   /** Fused explode+resolve+canon: use in a select; the analyzer lifts it into
     * a `Generate` node yielding (url, host, path, surt) per resolvable link. */

@@ -2,13 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
 /** Spark Column/UDF surface over the pure URL + HTML cores (SURVEY.md §2.2-2.3).
   *
-  * v1 ships Scala UDFs (correct, fusion-breaking at the UDF boundary);
-  * the hash/bucket helpers are pure builtin compositions and stay inside
-  * whole-stage codegen. All UDFs are registered under stable SQL names so
-  * `spark.sql` plans can use them too.
+  * `canonUdf`, `surtUdf` and `resolveUdf` build the native codegen
+  * expressions through [[CanonExpressions]] — the same builders as the SQL
+  * names `canon_url`, `surt` and `resolve_link` that [[GraftExtensions]]
+  * injects — so `canonUdf(resolveUdf(b, h))` is one fused kernel call in
+  * any session. The hash/bucket helpers are builtin compositions. The other
+  * URL and HTML kernels are Scala UDFs, registered under stable SQL names by
+  * [[register]].
   */
 object UrlFunctions {
 
@@ -25,35 +29,33 @@ object UrlFunctions {
   def hostReverseCol(host: Column): Column =
     concat_ws(".", reverse(split(host, "\\.")))
 
+  // --- native expressions ---
+
+  def canonUdf(raw: Column): Column = column(CanonExpressions.canon(expression(raw)))
+  def surtUdf(raw: Column): Column = column(CanonExpressions.surt(expression(raw)))
+  def resolveUdf(base: Column, href: Column): Column =
+    column(ResolveLink(expression(base), expression(href)))
+
   // --- UDFs over the pure core ---
 
-  // canon/surt/resolve carry their SQL names on the Column-API vals too, so
-  // NativeUrlRewrite can match either usage form by `udfName`
-  val canonUdf = udf((raw: String) => Option(UrlCanon.canonicalize(raw))).withName("canon_url")
-  val surtUdf = udf((raw: String) => Option(UrlCanon.surt(raw))).withName("surt")
   val hostOfUdf = udf((raw: String) => Option(UrlCanon.hostOf(raw)))
   val regHostUdf = udf((h: String) => Option(UrlCanon.regHost(h)))
   val hostReverseUdf = udf((h: String) => Option(UrlCanon.hostReverse(h)))
-  val resolveUdf = udf((base: String, ref: String) => Option(UrlCanon.resolve(base, ref))).withName("resolve_link")
   val pathOfUdf = udf((raw: String) => Option(UrlCanon.parse(raw)).filter(_ != null).map(_.path))
 
   val extractLinksUdf = udf((html: Array[Byte]) => Html.extractLinks(html))
   val extractTextUdf = udf((html: Array[Byte]) => Html.extractText(html))
 
-  val resolveCanonUdf = udf((base: String, href: String) =>
-    Option(UrlCanon.canonParts(UrlCanon.resolve(base, href))))
-
-  /** Register every function for SQL use. Idempotent. A user driving the
-    * engine through `spark.sql` gets the whole scalar surface: URL/HTML
-    * kernels plus the text-analysis, dedup-sketch, and similarity UDFs.
+  /** Register every UDF for SQL use. Idempotent. With [[GraftExtensions]]
+    * (which binds `canon_url`, `surt` and `resolve_link`, and which a
+    * same-named UDF would shadow) a user driving the engine through
+    * `spark.sql` gets the whole scalar surface: URL/HTML kernels plus the
+    * text-analysis, dedup-sketch, and similarity UDFs.
     */
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("canon_url", canonUdf)
-    spark.udf.register("surt", surtUdf)
     spark.udf.register("host_of", hostOfUdf)
     spark.udf.register("reg_host", regHostUdf)
     spark.udf.register("host_reverse", hostReverseUdf)
-    spark.udf.register("resolve_link", resolveUdf)
     spark.udf.register("url_path", pathOfUdf)
     spark.udf.register("extract_links", extractLinksUdf)
     spark.udf.register("extract_text", extractTextUdf)

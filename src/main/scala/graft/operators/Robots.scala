@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 
 import graft.model.{CrawlConfig, RobotsPolicy}
 
@@ -127,6 +128,13 @@ object Robots {
     val smUdf = udf((txt: String) => sitemapUrls(txt))
     robotsTable.select(col("host"), explode(smUdf(col("robots_txt"))).as("sitemap_url"))
   }
+
+  /** P2 on the broadcast arm, as a `(host, path)` predicate: a host with no
+    * policy allows every path; a null path (an unparseable URL) is refused.
+    */
+  def allowPathUdf(bc: Broadcast[Map[String, RobotsPolicy]]): UserDefinedFunction =
+    org.apache.spark.sql.functions.udf((host: String, path: String) =>
+      path != null && bc.value.get(host).forall(_.allows(path)))
 
   /** Pick the arm: broadcast map up to `cfg.robotsBroadcastMaxHosts` hosts,
     * distributed policy-table join above (removing the only driver-memory

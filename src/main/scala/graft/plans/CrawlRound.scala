@@ -319,8 +319,7 @@ object CrawlRound {
           val delayUdf = udf((host: String) =>
             bc.value.get(host).map(_.crawlDelayRounds).getOrElse(cfg.defaultCrawlDelayRounds))
           // robots decision over the pre-parsed path (no re-parse on the hot path)
-          val allowPathUdf = udf((host: String, path: String) =>
-            bc.value.get(host).forall(_.allows(path)))
+          val allowPathUdf = graft.operators.Robots.allowPathUdf(bc)
           (df => df.withColumn("delay", delayUdf(col("host"))),
             df => df.where(allowPathUdf(col("chost"), col("cpath"))))
         case graft.operators.RobotsJoin(policies) =>

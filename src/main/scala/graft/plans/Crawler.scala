@@ -33,11 +33,8 @@ object SeedInjector {
     // map is never collected.
     val robotsSeedFilter: DataFrame => DataFrame = robots match {
       case graft.operators.RobotsBroadcast(bc) =>
-        val allowUdf = udf((host: String, url: String) => {
-          val p = graft.functions.UrlCanon.parse(url)
-          p != null && bc.value.get(host).forall(_.allows(p.path))
-        })
-        df => df.where(allowUdf(col("host"), col("url")))
+        val allowUdf = graft.operators.Robots.allowPathUdf(bc)
+        df => df.where(allowUdf(col("host"), UrlFunctions.pathOfUdf(col("url"))))
       case graft.operators.RobotsJoin(policies) =>
         val pathUdf = udf((url: String) => {
           val p = graft.functions.UrlCanon.parse(url)
@@ -216,8 +213,7 @@ object Crawler {
       pages: DataFrame,
       robotsBc: org.apache.spark.broadcast.Broadcast[Map[String, RobotsPolicy]],
       cfg: CrawlConfig): DataFrame = {
-    val allowPathUdf = udf((host: String, path: String) =>
-      robotsBc.value.get(host).forall(_.allows(path)))
+    val allowPathUdf = graft.operators.Robots.allowPathUdf(robotsBc)
     val admitted = frontier
       .select("surt", "url", "host", "host_bucket", "depth", "score")
     // inner, not an outer+null-filter: unlike CrawlRound.fetchJoin (whose

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CanonExpressions, UrlFunctions}
+import graft.functions.{CanonExpressions, UrlCanon, UrlFunctions}
 
-/** M12: the native Catalyst expressions must be value-identical to the UDFs
-  * they replace (same kernels, different execution surface), and the
+/** M12: the native Catalyst expressions must be value-identical to the
+  * UrlCanon/Html kernels they call (compared on collected rows), and the
   * candidate pipeline must stay inside whole-stage codegen.
   */
 class CanonExprSpec extends AnyFunSuite with SparkTestSession {
@@ -14,18 +14,22 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
   lazy val pages = graft.sources.SyntheticWeb.pages(
     spark, graft.sources.SyntheticWeb.WebConfig(seed = 42L, nPages = 300, nHosts = 12)).toDF()
 
-  test("resolveCanon expression ≡ resolveCanon UDF on corpus link soup") {
+  /** (base, url, host, path, surt) of `canonParts(resolve(base, href))`. */
+  private def oracleParts(base: String, href: String): Seq[Any] = {
+    val cp = UrlCanon.canonParts(UrlCanon.resolve(base, href))
+    if (cp == null) Seq(base, null, null, null, null) else Seq(base, cp.url, cp.host, cp.path, cp.surt)
+  }
+
+  test("resolveCanon expression ≡ UrlCanon.canonParts(resolve) on corpus link soup") {
     val links = pages.select(col("url").as("base"),
       explode(UrlFunctions.extractLinksUdf(col("html"))).as("l"))
     val viaExpr = links.select(col("base"),
         CanonExpressions.resolveCanonCol(col("base"), col("l.href")).as("cp"))
       .select(col("base"), col("cp.url"), col("cp.host"), col("cp.path"), col("cp.surt"))
       .collect().map(_.toSeq).toSet
-    val viaUdf = links.select(col("base"),
-        UrlFunctions.resolveCanonUdf(col("base"), col("l.href")).as("cp"))
-      .select(col("base"), col("cp.url"), col("cp.host"), col("cp.path"), col("cp.surt"))
-      .collect().map(_.toSeq).toSet
-    assert(viaExpr == viaUdf)
+    val viaOracle = links.select(col("base"), col("l.href")).collect()
+      .map(r => oracleParts(r.getString(0), r.getString(1))).toSet
+    assert(viaExpr == viaOracle)
     assert(viaExpr.nonEmpty, "trivially-empty comparison")
   }
 
@@ -35,10 +39,10 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
       "HTTP://Ex.COM:80/a/../b?utm_source=x&b=2&a=%41#f",
       "https://h.example/p/./q//r?",
       "not a url", "", "ftp://x/y", "http://UP.Example.org:8080/Z?z=1&y=2").toDF("raw")
-    val e = raw.select(CanonExpressions.canonCol(col("raw")), CanonExpressions.surtCol(col("raw")))
+    val e = raw.select(col("raw"), UrlFunctions.canonUdf(col("raw")), UrlFunctions.surtUdf(col("raw")))
       .collect().map(_.toSeq).toSeq
-    val u = raw.select(UrlFunctions.canonUdf(col("raw")), UrlFunctions.surtUdf(col("raw")))
-      .collect().map(_.toSeq).toSeq
+    val u = raw.collect().map(_.getString(0))
+      .map(r => Seq(r, UrlCanon.canonicalize(r), UrlCanon.surt(r))).toSeq
     assert(e == u)
   }
 
@@ -171,7 +175,7 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     pages.select(col("html")).collect().foreach(r => check(r.getAs[Array[Byte]](0), "corpus"))
   }
 
-  test("resolve_links_gen ≡ explode + resolveCanon UDF (r6)") {
+  test("resolve_links_gen ≡ explode + UrlCanon.canonParts(resolve) (r6)") {
     // the fused generator must emit exactly the rows the v1 pipeline kept
     // after its cp.isNotNull filter, in the same per-page href order
     val viaGen = pages.select(col("url"),
@@ -180,14 +184,13 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
         CanonExpressions.resolveLinksGenCol(col("url"), col("s.links"))
           .as(Seq("curl", "chost", "cpath", "csurt")))
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val viaUdf = pages.select(col("url").as("base"),
+    val viaOracle = pages.select(col("url").as("base"),
         explode(UrlFunctions.extractLinksUdf(col("html"))).as("l"))
-      .select(col("base"),
-        UrlFunctions.resolveCanonUdf(col("base"), col("l.href")).as("cp"))
-      .where(col("cp").isNotNull)
-      .select(col("base"), col("cp.url"), col("cp.host"), col("cp.path"), col("cp.surt"))
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    assert(viaGen == viaUdf)
+      .select(col("base"), col("l.href")).collect()
+      .map(r => oracleParts(r.getString(0), r.getString(1)))
+      .filter(_(1) != null)
+      .toSeq.sortBy(_.toString)
+    assert(viaGen == viaOracle)
     assert(viaGen.nonEmpty, "trivially-empty comparison")
   }
 

@@ -1,19 +1,19 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{ResolveCanonSurt, CanonUrl, SurtOf, UrlCanon, UrlFunctions}
+import graft.functions.{CanonUrl, ResolveCanonSurt, ResolveLink, SurtOf, UrlCanon, UrlFunctions}
 
-/** GraftExtensions / NativeUrlRewrite: the injected optimizer rule must
-  * (a) actually fire — SQL and Column-API forms of `canon ∘ resolve` compile
-  * to ONE fused native kernel call, standalone canon/surt UDFs become native
-  * expressions, no ScalaUDF survives in the optimized plan — and (b) be
-  * value-exact vs the unrewritten UDF semantics on every input class,
-  * including the null-base/absolute-href edge where a null-safe wrapper
-  * would diverge (RFC 3986 §5.2.1 resolves an absolute href without reading
-  * the base).
+/** GraftExtensions / CanonExpressions: the URL kernel names must (a) bind to
+  * native expressions at ANALYSIS — SQL and Column-API forms of
+  * `canon ∘ resolve` build ONE fused kernel call, standalone canon/surt/
+  * resolve build their own native nodes, no ScalaUDF appears — and (b) be
+  * value-exact vs the UrlCanon kernels on every input class, including the
+  * null-base/absolute-href edge where a null-safe wrapper would diverge
+  * (RFC 3986 §5.2.1 resolves an absolute href without reading the base).
   */
 class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
 
@@ -51,30 +51,33 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
       Seq(if (cp == null) null else cp.url, if (cp == null) null else cp.surt)
     }.toSet
 
+  private def analyzedExprs(plan: LogicalPlan): Seq[Expression] =
+    plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  /** Each of the two fused forms, built by `build(field)` (0 = url via canon,
+    * 1 = surt via surt), analyzes to exactly one ResolveCanonSurt with no
+    * ScalaUDF and no standalone ResolveLink left, and equals UrlCanon. */
+  private def assertFused(form: String, build: Int => DataFrame): Unit =
+    Seq(0, 1).foreach { field =>
+      val df = build(field)
+      val analyzed = df.queryExecution.analyzed
+      val exprs = analyzedExprs(analyzed)
+      assert(exprs.count(_.isInstanceOf[ResolveCanonSurt]) == 1, s"$form/$field:\n$analyzed")
+      assert(!exprs.exists(e => e.isInstanceOf[ScalaUDF] || e.isInstanceOf[ResolveLink]),
+        s"$form/$field:\n$analyzed")
+      assert(df.collect().map(_.getString(0)).toSet == expected.map(_(field)), s"$form/$field")
+    }
+
   test("SQL canon_url(resolve_link(..)) fuses to one resolve_canon_surt kernel") {
     links.createOrReplaceTempView("links_ext")
-    val df = spark.sql(
-      """SELECT canon_url(resolve_link(base, href)) AS u,
-        |       surt(resolve_link(base, href)) AS s
-        |FROM links_ext""".stripMargin)
-    val opt = df.queryExecution.optimizedPlan
-    assert(opt.expressions.exists(_.exists(_.isInstanceOf[ResolveCanonSurt])),
-      s"no fused kernel in:\n$opt")
-    assert(!opt.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])),
-      s"ScalaUDF survived the rewrite:\n$opt")
-    assert(df.collect().map(_.toSeq).toSet == expected)
+    assertFused("SQL", field => spark.sql(
+      s"SELECT ${Seq("canon_url", "surt")(field)}(resolve_link(base, href)) AS v FROM links_ext"))
   }
 
-  test("Column-API canonUdf(resolveUdf(..)) fuses too (withName-tagged vals)") {
-    val df = links.select(
-      UrlFunctions.canonUdf(UrlFunctions.resolveUdf(col("base"), col("href"))).as("u"),
-      UrlFunctions.surtUdf(UrlFunctions.resolveUdf(col("base"), col("href"))).as("s"))
-    val opt = df.queryExecution.optimizedPlan
-    assert(opt.expressions.exists(_.exists(_.isInstanceOf[ResolveCanonSurt])),
-      s"no fused kernel in:\n$opt")
-    assert(!opt.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])),
-      s"ScalaUDF survived the rewrite:\n$opt")
-    assert(df.collect().map(_.toSeq).toSet == expected)
+  test("Column-API canonUdf(resolveUdf(..)) fuses too (the SQL functions' builders)") {
+    val fns = Seq(UrlFunctions.canonUdf _, UrlFunctions.surtUdf _)
+    assertFused("Column", field => links.select(
+      fns(field)(UrlFunctions.resolveUdf(col("base"), col("href"))).as("v")))
   }
 
   test("standalone canon_url / surt UDFs become native expressions") {
@@ -83,15 +86,32 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
       "https://h.example/p/./q//r?", "not a url", "ftp://x/y").toDF("raw"), "extraw")
     raw.createOrReplaceTempView("raw_ext")
     val df = spark.sql("SELECT canon_url(raw) AS c, surt(raw) AS s FROM raw_ext")
-    val opt = df.queryExecution.optimizedPlan
-    assert(opt.expressions.exists(_.exists(_.isInstanceOf[CanonUrl])), s"$opt")
-    assert(opt.expressions.exists(_.exists(_.isInstanceOf[SurtOf])), s"$opt")
-    assert(!opt.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])), s"$opt")
+    val analyzed = df.queryExecution.analyzed
+    assert(analyzedExprs(analyzed).exists(_.isInstanceOf[CanonUrl]), s"$analyzed")
+    assert(analyzedExprs(analyzed).exists(_.isInstanceOf[SurtOf]), s"$analyzed")
+    assert(!analyzedExprs(analyzed).exists(_.isInstanceOf[ScalaUDF]), s"$analyzed")
     val got = df.collect().map(_.toSeq).toSet
     val exp = raw.collect().map { r =>
       Seq(UrlCanon.canonicalize(r.getString(0)), UrlCanon.surt(r.getString(0)))
     }.toSet
     assert(got == exp)
+
+    links.createOrReplaceTempView("links_std")
+    val rl = spark.sql("SELECT base, href, resolve_link(base, href) FROM links_std")
+    val rlExprs = analyzedExprs(rl.queryExecution.analyzed)
+    assert(rlExprs.exists(_.isInstanceOf[ResolveLink]) && !rlExprs.exists(_.isInstanceOf[ScalaUDF]))
+    rl.collect().foreach { r =>
+      assert(r.getString(2) == UrlCanon.resolve(r.getString(0), r.getString(1)), s"$r")
+    }
+  }
+
+  test("a wrong argument count fails at analysis, naming the function") {
+    links.createOrReplaceTempView("links_arity")
+    Seq("canon_url" -> "base, href", "surt" -> "base, href", "resolve_link" -> "base").foreach {
+      case (fn, args) =>
+        val e = intercept[Exception](spark.sql(s"SELECT $fn($args) FROM links_arity"))
+        assert(e.getMessage.contains(fn), e.getMessage)
+    }
   }
 
   test("fused pipeline executes inside whole-stage codegen") {
@@ -182,14 +202,16 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("null-base/absolute-href edge: fused ≡ UDF composition (no null-safe shortcut)") {
     // the one input class where nullSafeEval semantics would differ: the
-    // fused kernel must still resolve the absolute href
+    // fused kernel must still resolve the absolute href, as UrlCanon does
     val r = UrlCanon.canonParts(UrlCanon.resolve(null, "http://orphan.example/ok"))
     assert(r != null && r.url == "http://orphan.example/ok")
     import spark.implicits._
     val one = Seq((Option.empty[String], "http://orphan.example/ok")).toDF("base", "href")
     val viaFused = one.select(
-      UrlFunctions.canonUdf(UrlFunctions.resolveUdf(col("base"), col("href"))).as("u"))
-      .head().getString(0)
-    assert(viaFused == "http://orphan.example/ok")
+      UrlFunctions.canonUdf(UrlFunctions.resolveUdf(col("base"), col("href"))).as("u"),
+      UrlFunctions.resolveUdf(col("base"), col("href")).as("r"))
+      .head()
+    assert(viaFused.getString(0) == r.url)
+    assert(viaFused.getString(1) == UrlCanon.resolve(null, "http://orphan.example/ok"))
   }
 }
